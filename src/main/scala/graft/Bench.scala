@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark entry point. Times every declared query (two interleaved
   * passes, min) and emits ONE compact JSON line as the final stdout line.
@@ -145,6 +146,22 @@ object Bench {
   private[graft] def spreadForcesIsolation(postRetrySpread: Double): Boolean =
     postRetrySpread > 0.6
 
+  /** One trial of a key: `Some(seconds)` when `fn`'s frame is built and
+    * counted to the end, `None` when either step throws — a failure is
+    * never recorded as a time. */
+  private[graft] def timeKey(spark: SparkSession, sfDir: String,
+                             fn: (SparkSession, String) => DataFrame): Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, sfDir).count()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch {
+      case NonFatal(e) =>
+        System.err.println(s"[bench] FAILED: $e")
+        None
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -155,12 +172,16 @@ object Bench {
     spark.range(1000000).selectExpr("sum(id)").collect()
     SparkEntry.entry(spark).count()
     // Per-trial record: seconds plus the 1-min loadavg sampled just
-    // before the trial started (host-noise telemetry).
-    def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    // before the trial started (host-noise telemetry). A trial that
+    // throws marks its key failed: every later step skips or drops it.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    // a key that threw in any trial (retries and isolated ones too) has
+    // no time: it stays out of the total, the queries map and the floor
+    def kept[T](kvs: Seq[(String, T)]): Seq[(String, T)] =
+      kvs.filterNot(kv => failed(kv._1))
+    def timeOne(name: String, fn: (SparkSession, String) => DataFrame): (Double, Double) = {
       val la = loadavg()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      ((System.nanoTime() - t0) / 1e9, la)
+      (timeKey(spark, sfDir, fn).getOrElse { failed += name; Double.NaN }, la)
     }
     // Two trials per query: value = min (steady state), spread =
     // (max-min)/min — the per-query contention indicator that lets a
@@ -181,17 +202,17 @@ object Bench {
     def runPass(label: String): Map[String, (Double, Double)] =
       keys.map { case (name, fn) =>
         System.err.println(s"[bench] $label $name")
-        name -> timeOne(fn)
+        name -> timeOne(name, fn)
       }.toMap
     val (passA, passB) = (runPass("passA"), runPass("passB"))
-    val trials = keys.map { case (name, fn) =>
+    val trials = kept(keys).map { case (name, fn) =>
       val two = Seq(passA(name), passB(name))
       val (mn, mx) = (two.map(_._1).min, two.map(_._1).max)
       // retry only where the disagreement is both relative AND absolute
       // (micro-keys flip large relative spreads on scheduler jitter)
       if (mn > 1e-9 && (mx - mn) / mn > 0.5 && mx - mn > 0.15) {
         System.err.println(s"[bench] retry $name (spread ${(mx - mn) / mn})")
-        (name, two :+ timeOne(fn))
+        (name, two :+ timeOne(name, fn))
       } else (name, two)
     }
     val nRetried = trials.count(_._2.size > 2)
@@ -214,8 +235,8 @@ object Bench {
     // of permanently carrying the sweep contention it adjudicated.
     def isolatedMeasure(name: String): (Double, Double) = {
       val fn = fnByName(name)
-      timeOne(fn) // warm, untimed
-      val ts = Seq(timeOne(fn)._1, timeOne(fn)._1, timeOne(fn)._1).sorted
+      timeOne(name, fn) // warm, untimed
+      val ts = Seq.fill(3)(timeOne(name, fn)._1).sorted
       val mn = ts.head
       // the certificate is the agreement of the TWO FASTEST post-warm
       // trials: one interrupted trial (a GC pause is 0.2 s — 1.5x a
@@ -229,7 +250,7 @@ object Bench {
       val mn = secs.min
       if (mn > 1e-9) (secs.max - mn) / mn else 0.0
     }
-    val isolatedFull: Seq[(String, (Double, Double))] = trials.flatMap { case (name, ts) =>
+    val isolatedFull: Seq[(String, (Double, Double))] = kept(trials).flatMap { case (name, ts) =>
       val secs = ts.map(_._1)
       val mn = secs.min
       val postRetrySpread = spreadOf(secs)
@@ -246,7 +267,7 @@ object Bench {
     val isoSpreadByName = isolatedFull.map { case (n, (_, sp)) => n -> sp }.toMap
     val allTrials = trials.map { case (name, ts) =>
       name -> (ts.map(_._1) ++ isoByName.get(name).toSeq) }
-    val results = allTrials.map { case (name, secs) => name -> secs.min }
+    val results = kept(allTrials.map { case (name, secs) => name -> secs.min })
     // Both spreads are reported (round-12 ADVICE — the adjudication
     // must be auditable, not self-certified): `spread` carries the
     // isolated post-warm spread where an isolated re-measure ran (the
@@ -258,9 +279,9 @@ object Bench {
       name -> spreadOf(ts.map(_._1)) }
     val sweepByName = sweepSpreads.toMap
     val replacedSweep = isolatedFull.map { case (n, _) => n -> sweepByName(n) }
-    val spreads = allTrials.map { case (name, secs) =>
-      name -> isoSpreadByName.getOrElse(name, spreadOf(secs)) }
-    val loads = trials.map { case (name, ts) => name -> ts.map(_._2).max }
+    val spreads = kept(allTrials.map { case (name, secs) =>
+      name -> isoSpreadByName.getOrElse(name, spreadOf(secs)) })
+    val loads = kept(trials.map { case (name, ts) => name -> ts.map(_._2).max })
     // Locale.ROOT: the f-interpolator uses the JVM default locale, which
     // renders a comma decimal separator (invalid JSON) under e.g. de_DE.
     def fmt(v: Double): String =
@@ -276,10 +297,11 @@ object Bench {
     val loadStats =
       if (loadVals.isEmpty) s""""load_p50":-1,"load_max":-1"""
       else s""""load_p50":${fmt(loadVals(loadVals.size / 2))},"load_max":${fmt(loadVals.last)}"""
-    val spreadSweepMax = sweepSpreads.map(_._2).max
-    val spreadStats = s""""trials":2,"trial_order":"interleaved","retried":$nRetried,"isolated_n":${isolated.size},"spread_p50":${fmt(spreadP50)},"spread_max":${fmt(spreadMax)},"spread_sweep_max":${fmt(spreadSweepMax)},$loadStats"""
-    val isoJson = jsonMap(isolated)
-    val detail = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$spreadStats,"baseline":${jsonMap(baseline)},"isolated":$isoJson,"sweep_spread":${jsonMap(replacedSweep)},"queries":${jsonMap(results)},"spread":${jsonMap(spreads)},"load":${jsonMap(loads)},"sf":"$sfDir"}"""
+    val spreadSweepMax = kept(sweepSpreads).map(_._2).max
+    val spreadStats = s""""trials":2,"trial_order":"interleaved","retried":$nRetried,"isolated_n":${kept(isolated).size},"spread_p50":${fmt(spreadP50)},"spread_max":${fmt(spreadMax)},"spread_sweep_max":${fmt(spreadSweepMax)},$loadStats"""
+    val isoJson = jsonMap(kept(isolated))
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val detail = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,$spreadStats,"baseline":${jsonMap(baseline)},"isolated":$isoJson,"sweep_spread":${jsonMap(kept(replacedSweep))},"queries":${jsonMap(results)},"spread":${jsonMap(spreads)},"load":${jsonMap(loads)},"sf":"$sfDir"}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
       java.nio.file.Files.write(p, detail.getBytes("UTF-8"))
@@ -287,7 +309,7 @@ object Bench {
     } catch { case _: Throwable => () }
     writeFloor(committed, results)
     val head = results.filter { case (k, _) => headline.contains(k) }
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},$spreadStats,"baseline":${jsonMap(baseline)},"isolated":$isoJson,"queries":${jsonMap(head)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"failed":$failedJson,$spreadStats,"baseline":${jsonMap(baseline)},"isolated":$isoJson,"queries":${jsonMap(head)},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -701,24 +701,24 @@ object Dedup {
     // of a mostly-unique corpus) can never change label, so they skip the
     // loop entirely and rejoin at the end — every round's join, shuffle
     // and checkpoint is sized by the near-dup subgraph, not the corpus.
-    var labels = edges.select(col("src").as("id")).distinct()
+    val labels0 = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
       .localCheckpoint()
-    var changed = 1L
-    var round = 0
-    // r18: propagation rounds run under loop-scoped settings
-    // (Scale.loopConf — AQE off, shuffle parallelism derived from the
-    // checkpointed edge count; see Graphs.pagerankConvergedWithRound's
-    // note for the measured why). The loop is sized by the near-dup
-    // subgraph, so the derived partition count follows the edge table.
-    Scale.loopConf(edges.sparkSession, edges.count()) {
-    while (changed > 0 && round < maxRounds) {
+    // r18: propagation rounds run under the loop settings (Fixpoint —
+    // AQE off, shuffle parallelism derived from the checkpointed edge
+    // count; see Graphs.pagerankConvergedWithRound's note for the
+    // measured why). The loop is sized by the near-dup subgraph, so the
+    // derived partition count follows the edge table. Each round is
+    // checkpointed with a `chg` flag; no changed label is the fixpoint.
+    val fx = new Fixpoint(edges.sparkSession, edges.count())
+    val res = fx.frames(labels0, maxRounds)((s, i) => {
+      val labels = s.select("id", "comp")
       val prop = edges.join(labels, col("src") === col("id"))
         .groupBy(col("dst")).agg(min("comp").as("ncomp"))
       val stepped = labels.join(prop, labels("id") === prop("dst"), "left")
         .select(labels("id"), col("comp").as("prev"),
           least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-      val next = (if (round < jumpAfter) {
+      if (i <= jumpAfter) {
         stepped.select(col("id"), col("comp"), (col("comp") < col("prev")).as("chg"))
       } else {
         // Pointer jumping: comp := min(comp, comp-of-comp). Labels are
@@ -730,13 +730,10 @@ object Dedup {
             least(stepped("comp"), coalesce(par("pcomp"), stepped("comp"))).as("comp"),
             (least(stepped("comp"), coalesce(par("pcomp"), stepped("comp"))) <
               col("prev")).as("chg"))
-      }).localCheckpoint()
-      changed = next.filter(col("chg")).count()
-      labels = next.select("id", "comp")
-      round += 1
-    }
-    } // Scale.loopConf
-    if (changed > 0) {
+      }
+    }, (_, next, _) => next.filter(col("chg")).count() == 0L)
+    var labels = res.state.select("id", "comp")
+    if (!res.converged) {
       // Round budget exhausted (a graph whose diameter outruns even the
       // pointer-jumped rounds): finish with the guaranteed-O(log n)
       // contraction. Current labels are a valid coarsening (every label
@@ -790,32 +787,33 @@ object Dedup {
         .filter(col("v") =!= col("m"))
         .select(col("v").as("src"), col("m").as("dst")).distinct()
     }
-    var e = edges0.filter(col("src") =!= col("dst"))
+    val e0 = edges0.filter(col("src") =!= col("dst"))
       .select("src", "dst").distinct().localCheckpoint()
-    var n = e.count()
-    var stable = n == 0
-    var i = 0
-    // r18: contraction alternations under loop-scoped settings (see
+    var n = e0.count()
+    // r18: contraction alternations under the loop settings (see
     // Graphs.pagerankConvergedWithRound's note for the measured why)
-    Scale.loopConf(e.sparkSession, n) {
-      while (!stable && i < cap) {
-        val e2 = smallStar(largeStar(e)).localCheckpoint()
-        val n2 = e2.count()
-        // exact set-equality fixpoint test: equal counts + empty diff
-        // (both sides are distinct); the fallback path trades these two
-        // cheap extra jobs for a guarantee, not for speed
-        stable = n2 == n && e2.except(e).isEmpty
-        e = e2; n = n2; i += 1
-      }
-    }
+    val fx = new Fixpoint(e0.sparkSession, n)
+    // exact set-equality fixpoint test: equal counts + empty diff (both
+    // sides are distinct); the fallback path trades these two cheap
+    // extra jobs for a guarantee, not for speed. An empty edge set is
+    // already the fixpoint: no alternation runs.
+    val res =
+      if (n == 0) Fixpoint.Outcome(e0, 0, converged = true)
+      else fx.frames(e0, cap)((s, _) => smallStar(largeStar(s)), (prev, next, _) => {
+        val n2 = next.count()
+        val stable = n2 == n && next.except(prev).isEmpty
+        n = n2
+        stable
+      })
     // Large-star/small-star provably converges in O(log n) alternations, so
     // cap=64 is unreachable for any graph with < 2^64 nodes — if the loop
     // still expired, the labels below would be a star forest ONLY partially
     // contracted (a src carrying several dst roots → duplicate contradictory
     // (id, root) rows). Fail loudly instead of emitting corrupt clusters.
-    require(stable,
+    require(res.converged,
       s"starContract did not reach a star-forest fixpoint in $cap alternations " +
         "— refusing to emit (possibly multi-rooted) labels")
+    val e = fx.back(res.state)
     // fixpoint is a star forest: every edge is (node, component-min root);
     // roots appear only on the dst side
     val nodeLabels = e.select(col("src").as("id"), col("dst").as("root")).distinct()

@@ -75,37 +75,32 @@ object Graphs {
       if (!redistributeDangling) null
       else ids.join(eo.select(col("src").as("id")), Seq("id"), "left_anti")
         .localCheckpoint()
-    var ranks = ids.select(col("id"), lit(r0).as("r"))
-    // r18: rounds run under loop-scoped settings (Scale.loopConf) — AQE
-    // off, shuffle parallelism derived from the checkpointed edge count
-    // (see pagerankConvergedWithRound's note for the measured why).
-    Scale.loopConf(ids.sparkSession, eo.count()) {
-      for (_ <- 1 to iters) {
-        val contribs = eo.join(ranks, eo("src") === ranks("id"))
-          .select(col("dst").as("id"), expr("r div outd").as("c"))
-          .groupBy("id").agg(sum(col("c")).as("s"))
-        val next = ids.join(contribs, Seq("id"), "left")
-        ranks =
-          if (!redistributeDangling)
-            next.select(col("id"),
-                (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-              .localCheckpoint()
-          else {
-            // ONE scalar-sized aggregate: the round's dangling mass as a
-            // 1-row DataFrame, broadcast into the rank projection (a
-            // BroadcastNestedLoopJoin over one row — in-plan, never a
-            // driver collect loop)
-            val d = ranks.join(dangling, Seq("id"), "left_semi")
-              .agg(coalesce(sum(col("r")), lit(0L)).as("dsum"))
-            next.crossJoin(broadcast(d))
-              .select(col("id"),
-                (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")
-                  + expr(s"(85 * dsum) div ${100L * n}")).as("r"))
-              .localCheckpoint()
-          }
+    // every round is materialized under the loop settings (Fixpoint —
+    // AQE off, shuffle parallelism derived from the checkpointed edge
+    // count; see pagerankConvergedWithRound's note for the measured why);
+    // a fixed round count is a normal end, never a spent budget
+    val fx = new Fixpoint(ids.sparkSession, eo.count())
+    fx.back(fx.frames(ids.select(col("id"), lit(r0).as("r")), iters)((ranks, _) => {
+      val contribs = eo.join(ranks, eo("src") === ranks("id"))
+        .select(col("dst").as("id"), expr("r div outd").as("c"))
+        .groupBy("id").agg(sum(col("c")).as("s"))
+      val next = ids.join(contribs, Seq("id"), "left")
+      if (!redistributeDangling)
+        next.select(col("id"),
+          (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+      else {
+        // ONE scalar-sized aggregate: the round's dangling mass as a
+        // 1-row DataFrame, broadcast into the rank projection (a
+        // BroadcastNestedLoopJoin over one row — in-plan, never a
+        // driver collect loop)
+        val d = ranks.join(dangling, Seq("id"), "left_semi")
+          .agg(coalesce(sum(col("r")), lit(0L)).as("dsum"))
+        next.crossJoin(broadcast(d))
+          .select(col("id"),
+            (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")
+              + expr(s"(85 * dsum) div ${100L * n}")).as("r"))
       }
-    }
-    ranks
+    }, (_, _, _) => false).state)
   }
 
   /** Per-node TRIANGLE counts over a directed edge list (the local
@@ -233,7 +228,6 @@ object Graphs {
                                  dstCol: String, maxIters: Int = 128,
                                  scale: Long = 0L,
                                  blockSize: Int = 4): (DataFrame, Int) = {
-    require(blockSize >= 1, s"blockSize must be >= 1: $blockSize")
     val ids = nodes.select(col(idCol).cast("long").as("id"))
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
@@ -254,7 +248,7 @@ object Graphs {
       s"pagerankConverged: scale=$sc is too coarse for n=$n nodes " +
         "(the per-node base floors to 0, so every rank would be 0) — " +
         "raise scale proportionally to n")
-    var ranks = ids.select(col("id"), lit(base).as("r")).localCheckpoint()
+    val ranks0 = ids.select(col("id"), lit(base).as("r")).localCheckpoint()
     def oneRound(r: DataFrame): DataFrame = {
       val contribs = eo.join(r, eo("src") === r("id"))
         .select(col("dst").as("id"), expr("r div outd").as("c"))
@@ -274,47 +268,43 @@ object Graphs {
     // — 10.3 s vs 4.9 s profiled at sf0.1 — and was reverted; see
     // OPTIMIZATION_r17.md.)
     var prevSum = n * base // the seed's sum: n rows of `base`
-    var it = 0
-    // r18: the ~30 synchronous rounds execute under loop-scoped settings
-    // (Scale.loopConf — AQE off, shuffle parallelism derived from the
+    def flat(next: DataFrame): Boolean = {
+      // coalesce: locally total even on an empty rank table (sum over
+      // zero rows is SQL NULL; reaching it would
+      // otherwise rely on the distant require(n > 0))
+      val s = next.agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
+      // The sum probe is sound ONLY because the rank chain is pointwise
+      // non-decreasing (Kleene from the bottom seed, no dangling
+      // reflow). Guard the invariant: any future edit
+      // that breaks the precondition fails loudly here instead of
+      // silently declaring a false fixpoint on a sum collision.
+      if (s < prevSum) throw new IllegalStateException(
+        s"pagerankConverged: rank-sum decreased ($prevSum -> $s) — the " +
+          "pointwise-monotone precondition of the sum-based convergence " +
+          "probe no longer holds; restore the bottom seed / reflow-free " +
+          "round body or replace the probe with a symmetric difference")
+      val same = s == prevSum
+      prevSum = s
+      same
+    }
+    // r18: the ~30 synchronous rounds execute under the loop settings
+    // (Fixpoint — AQE off, shuffle parallelism derived from the
     // checkpointed edge count): round 17 profiled this loop at 290 jobs
     // with ~45% of wall-clock in driver gaps between them; the loop body
     // is a fixed-shape keyed join + combine whose size is bounded by the
     // edge table, so per-round re-optimization has nothing to decide.
-    Scale.loopConf(ids.sparkSession, eo.count()) {
-      while (it < maxIters) {
-        val k = math.min(blockSize, maxIters - it)
-        // k rounds chained LAZILY, one checkpoint for the block
-        val next = (1 to k).foldLeft(ranks)((r, _) => oneRound(r))
-          .localCheckpoint()
-        // coalesce: locally total even on an empty rank table (sum over
-        // zero rows is SQL NULL — ADVICE r17 #4; reaching it would
-        // otherwise rely on the distant require(n > 0))
-        val s = next.agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
-        // The sum probe is sound ONLY because the rank chain is pointwise
-        // non-decreasing (Kleene from the bottom seed, no dangling
-        // reflow). Guard the invariant (ADVICE r17 #2): any future edit
-        // that breaks the precondition fails loudly here instead of
-        // silently declaring a false fixpoint on a sum collision.
-        if (s < prevSum) throw new IllegalStateException(
-          s"pagerankConverged: rank-sum decreased ($prevSum -> $s) — the " +
-            "pointwise-monotone precondition of the sum-based convergence " +
-            "probe no longer holds; restore the bottom seed / reflow-free " +
-            "round body or replace the probe with a symmetric difference")
-        // reported round = block start + 1: r_{blockStart} equals
-        // r_{blockStart+1} (constant chain), so the fixpoint is
-        // certified reached by that round — an upper bound within
-        // blockSize-1 of the exact first-flat round
-        if (s == prevSum) return (next, it + 1)
-        prevSum = s
-        ranks = next
-        it += k
-      }
-    }
-    throw new IllegalStateException(
+    val fx = new Fixpoint(ids.sparkSession, eo.count())
+    val res = fx.frames(ranks0, maxIters, blockSize)((r, _) => oneRound(r),
+      (_, next, _) => flat(next))
+    if (!res.converged) throw new IllegalStateException(
       s"pagerankConverged: no integer fixpoint after $maxIters rounds — " +
         "raise maxIters (and the oracle's unroll depth) rather than " +
         "accepting a truncated iteration")
+    // reported round = block start + 1: r_{blockStart} equals
+    // r_{blockStart+1} (constant chain), so the fixpoint is certified
+    // reached by that round — an upper bound within blockSize-1 of the
+    // exact first-flat round (blocks start at multiples of blockSize)
+    (fx.back(res.state), (res.rounds - 1) / blockSize * blockSize + 1)
   }
 
   /** K-CORE of an undirected graph — the maximal induced subgraph in
@@ -362,7 +352,6 @@ object Graphs {
                      k: Int, maxIters: Int = 64,
                      blockSize: Int = 4): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1: $k")
-    require(blockSize >= 1, s"blockSize must be >= 1: $blockSize")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     // symmetrize + dedup: degree = out-degree in the undirected edge set
@@ -373,75 +362,60 @@ object Graphs {
     // checkpoint instead of three separately-recomputed chains
     // (deg/frontier/layers as distinct DataFrames tripled the block's
     // executed work; measured 16.9 s -> the fused form at sf0.1)
-    var st = eg.groupBy("src").agg(count(lit(1)).as("deg"))
+    val st0 = eg.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"),
         when(col("deg") < k, 1).otherwise(lit(null)).cast("int").as("layer"))
       .localCheckpoint()
-    // completed-peel extractor shared by the in-loop fixpoint probe and
-    // the post-loop boundary probe (ADVICE r16)
-    def finish(s: DataFrame): (DataFrame, Int) = {
-      val done = s.select(col("id"), coalesce(col("layer"), lit(0)).as("layer"))
-      // certified peel depth = the deepest assigned layer (one tiny
-      // scalar job); the oracle's unroll R is sound iff R >= this
-      val maxLayer = done.agg(max(when(col("layer") > 0, col("layer"))))
-        .head().get(0) match {
-          case null => 0
-          case v: Int => v
-        }
-      (done, maxLayer)
+    // peel round i: the nodes of layer i - 1 drop out, and every alive
+    // node that falls below k gets layer i
+    def peel(s: DataFrame, i: Int): DataFrame = {
+      val f = s.filter(col("layer") === i - 1).select("id")
+      // edges whose dst just dropped: each still-alive src loses that many
+      val lost = eg.join(f, eg("dst") === f("id"))
+        .groupBy("src").agg(count(lit(1)).as("lostn"))
+        .select(col("src").as("id"), col("lostn"))
+      s.join(lost, Seq("id"), "left")
+        .select(col("id"),
+          when(col("layer").isNotNull, col("deg"))
+            .otherwise(col("deg") - coalesce(col("lostn"), lit(0L))).as("deg"),
+          coalesce(col("layer"),
+            when(col("deg") - coalesce(col("lostn"), lit(0L)) < k,
+              lit(i))).cast("int").as("layer"))
     }
-    var round = 1 // layer 1 assigned above; loop rounds assign 2, 3, …
-    var it = 1 // the init layer counts against maxIters (ADVICE r16)
-    // r18: peel rounds run under loop-scoped settings (Scale.loopConf —
-    // AQE off, parallelism derived from the materialized edge count; eg
-    // was materialized by st's eager checkpoint above, so the count is
-    // a cached-RDD read, not a recompute).
-    Scale.loopConf(eg.sparkSession, eg.count()) {
-    while (it < maxIters) {
-      val blk = math.min(blockSize, maxIters - it)
-      var s = st
-      for (j <- 1 to blk) {
-        val f = s.filter(col("layer") === round + j - 1).select("id")
-        // edges whose dst just dropped: each still-alive src loses that many
-        val lost = eg.join(f, eg("dst") === f("id"))
-          .groupBy("src").agg(count(lit(1)).as("lostn"))
-          .select(col("src").as("id"), col("lostn"))
-        s = s.join(lost, Seq("id"), "left")
-          .select(col("id"),
-            when(col("layer").isNotNull, col("deg"))
-              .otherwise(col("deg") - coalesce(col("lostn"), lit(0L))).as("deg"),
-            coalesce(col("layer"),
-              when(col("deg") - coalesce(col("lostn"), lit(0L)) < k,
-                lit(round + j))).cast("int").as("layer"))
-      }
-      st = s.localCheckpoint()
-      round += blk
-      it += blk
-      // fixpoint probe: the LAST round assigned no layer => the next
-      // frontier is empty — nothing can ever fall below k (mid-block
-      // emptying leaves later in-block rounds as no-ops)
-      if (st.filter(col("layer") === round).isEmpty) return finish(st)
-    }
+    // r18: peel rounds run under the loop settings (Fixpoint — AQE off,
+    // parallelism derived from the materialized edge count; eg was
+    // materialized by st0's eager checkpoint above, so the count is a
+    // cached-RDD read, not a recompute). Layer 1 is assigned above, so
+    // it counts against maxIters. Fixpoint probe: the LAST
+    // round assigned no layer => the next frontier is empty — nothing
+    // can ever fall below k (mid-block emptying leaves later in-block
+    // rounds as no-ops).
+    val fx = new Fixpoint(eg.sparkSession, eg.count())
+    val res = fx.frames(st0, maxIters, blockSize, start = 1)(peel,
+      (_, s, i) => s.filter(col("layer") === i).isEmpty)
+    val st = fx.on(res.state)
     // Post-loop boundary probe (ADVICE r16): the in-loop probe only
     // certifies a fixpoint when the final block's LAST round assigned
     // nothing — a cascade whose last assignment landed exactly on round
     // maxIters has ALSO converged iff one further round would assign
     // nothing. Probe that once before declaring truncation, so hitting
     // the budget exactly is success, not a spurious failure.
-    val bf = st.filter(col("layer") === round).select("id")
-    val blost = eg.join(bf, eg("dst") === bf("id"))
-      .groupBy("src").agg(count(lit(1)).as("lostn"))
-      .select(col("src").as("id"), col("lostn"))
-    val wouldFall = st.join(blost, Seq("id"), "left")
-      .filter(col("layer").isNull &&
-        col("deg") - coalesce(col("lostn"), lit(0L)) < k)
-    if (wouldFall.isEmpty) return finish(st)
-    } // Scale.loopConf
-    throw new IllegalStateException(
-      s"kcore: the peel cascade is still running after $maxIters rounds " +
-        "(the initial below-k layer counts as round 1) — raise maxIters " +
-        "(and the oracle's unroll depth) rather than accepting a " +
-        "truncated core")
+    val after = res.rounds + 1
+    if (!res.converged && !peel(st, after).filter(col("layer") === after).isEmpty)
+      throw new IllegalStateException(
+        s"kcore: the peel cascade is still running after $maxIters rounds " +
+          "(the initial below-k layer counts as round 1) — raise maxIters " +
+          "(and the oracle's unroll depth) rather than accepting a " +
+          "truncated core")
+    val done = st.select(col("id"), coalesce(col("layer"), lit(0)).as("layer"))
+    // certified peel depth = the deepest assigned layer (one tiny scalar
+    // job); the oracle's unroll R is sound iff R >= this
+    val maxLayer = done.agg(max(when(col("layer") > 0, col("layer"))))
+      .head().get(0) match {
+        case null => 0
+        case v: Int => v
+      }
+    (fx.back(done), maxLayer)
   }
 
   /** Multi-source SHORTEST PATHS (unit weights — BFS levels) to the
@@ -479,8 +453,7 @@ object Graphs {
   def ssspWithRound(seeds: DataFrame, idCol: String, edges: DataFrame,
                     srcCol: String, dstCol: String, maxIters: Int = 64,
                     blockSize: Int = 4): (DataFrame, Int) = {
-    require(blockSize >= 1, s"blockSize must be >= 1: $blockSize")
-    // r18: eager checkpoint (was lazy) so the loopConf edge count below
+    // r18: eager checkpoint (was lazy) so the loop's edge count below
     // reads the cached RDD instead of re-running the upstream kNN build
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).localCheckpoint()
@@ -488,40 +461,30 @@ object Graphs {
     // node — so the frontier is a cheap filter over the single
     // per-block checkpoint instead of a second separately-recomputed
     // chain (the kcoreWithRound fusion; it halved this loop's wall)
-    var st = seeds.select(col(idCol).cast("long").as("id"),
+    val st0 = seeds.select(col(idCol).cast("long").as("id"),
       lit(0).cast("int").as("dist"), lit(0).cast("int").as("r"))
       .localCheckpoint()
-    var round = 0
-    var it = 0
-    // r18: BFS rounds under loop-scoped settings (see
-    // pagerankConvergedWithRound's note for the measured why)
-    Scale.loopConf(e.sparkSession, e.count()) {
-    while (it < maxIters) {
-      val blk = math.min(blockSize, maxIters - it)
-      var s = st
-      for (j <- 1 to blk) {
-        val f = s.filter(col("r") === round + j - 1).select("id", "dist")
-        val nf = e.join(f, e("src") === f("id"))
-          .select(col("dst").as("id"), (col("dist") + 1).as("nd"))
-          .groupBy("id").agg(min(col("nd")).cast("int").as("dist"))
-          .join(s.select("id"), Seq("id"), "left_anti")
-          .select(col("id"), col("dist"), lit(round + j).cast("int").as("r"))
-        s = s.union(nf)
-      }
-      st = s.localCheckpoint()
-      round += blk
-      it += blk
-      // the LAST round's reached set empty => the next frontier is
-      // empty — the fixpoint (mid-block emptying leaves later in-block
-      // rounds as no-ops, so checking the final round alone is sound)
-      if (st.filter(col("r") === round).isEmpty)
-        return (st.select("id", "dist"), it)
-    }
-    } // Scale.loopConf
-    throw new IllegalStateException(
+    // r18: BFS rounds under the loop settings (see
+    // pagerankConvergedWithRound's note for the measured why); round i
+    // expands the nodes reached in round i - 1. The LAST round's reached
+    // set empty => the next frontier is empty — the fixpoint (mid-block
+    // emptying leaves later in-block rounds as no-ops, so checking the
+    // final round alone is sound)
+    val fx = new Fixpoint(e.sparkSession, e.count())
+    val res = fx.frames(st0, maxIters, blockSize)((s, i) => {
+      val f = s.filter(col("r") === i - 1).select("id", "dist")
+      val nf = e.join(f, e("src") === f("id"))
+        .select(col("dst").as("id"), (col("dist") + 1).as("nd"))
+        .groupBy("id").agg(min(col("nd")).cast("int").as("dist"))
+        .join(s.select("id"), Seq("id"), "left_anti")
+        .select(col("id"), col("dist"), lit(i).cast("int").as("r"))
+      s.union(nf)
+    }, (_, s, i) => s.filter(col("r") === i).isEmpty)
+    if (!res.converged) throw new IllegalStateException(
       s"sssp: the frontier is still growing after $maxIters rounds — " +
         "raise maxIters (and the oracle's depth bound) rather than " +
         "accepting truncated distances")
+    (fx.back(res.state.select("id", "dist")), res.rounds)
   }
 
   /** WEIGHTED multi-source shortest paths to the least fixpoint —
@@ -551,46 +514,35 @@ object Graphs {
                             dstCol: String, wCol: String,
                             maxIters: Int = 64,
                             blockSize: Int = 4): (DataFrame, Int) = {
-    require(blockSize >= 1, s"blockSize must be >= 1: $blockSize")
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"), col(wCol).cast("int").as("w"))
       .localCheckpoint()
     // ONE state table (id, dist, ir) — ir = the round of the node's
     // last improvement, so the improved-set frontier is a filter over
     // the single per-block checkpoint
-    var st = seeds.select(col(idCol).cast("long").as("id"),
+    val st0 = seeds.select(col(idCol).cast("long").as("id"),
       lit(0).cast("int").as("dist"), lit(0).cast("int").as("ir"))
       .localCheckpoint()
-    var round = 0
-    var it = 0
-    // r18: relaxation rounds under loop-scoped settings (see
-    // pagerankConvergedWithRound's note for the measured why)
-    Scale.loopConf(e.sparkSession, e.count()) {
-    while (it < maxIters) {
-      val blk = math.min(blockSize, maxIters - it)
-      var s = st
-      for (j <- 1 to blk) {
-        val f = s.filter(col("ir") === round + j - 1).select("id", "dist")
-        val cand = e.join(f, e("src") === f("id"))
-          .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
-          .groupBy("id").agg(min(col("nd")).cast("int").as("nd"))
-        val better = col("nd").isNotNull &&
-          (col("dist").isNull || col("nd") < col("dist"))
-        s = s.join(cand, Seq("id"), "full_outer")
-          .select(col("id"),
-            when(better, col("nd")).otherwise(col("dist")).cast("int").as("dist"),
-            when(better, lit(round + j)).otherwise(col("ir")).cast("int").as("ir"))
-      }
-      st = s.localCheckpoint()
-      round += blk
-      it += blk
-      if (st.filter(col("ir") === round).isEmpty)
-        return (st.select("id", "dist"), it)
-    }
-    } // Scale.loopConf
-    throw new IllegalStateException(
+    // r18: relaxation rounds under the loop settings (see
+    // pagerankConvergedWithRound's note for the measured why); round i
+    // relaxes the edges out of the nodes improved in round i - 1
+    val fx = new Fixpoint(e.sparkSession, e.count())
+    val res = fx.frames(st0, maxIters, blockSize)((s, i) => {
+      val f = s.filter(col("ir") === i - 1).select("id", "dist")
+      val cand = e.join(f, e("src") === f("id"))
+        .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
+        .groupBy("id").agg(min(col("nd")).cast("int").as("nd"))
+      val better = col("nd").isNotNull &&
+        (col("dist").isNull || col("nd") < col("dist"))
+      s.join(cand, Seq("id"), "full_outer")
+        .select(col("id"),
+          when(better, col("nd")).otherwise(col("dist")).cast("int").as("dist"),
+          when(better, lit(i)).otherwise(col("ir")).cast("int").as("ir"))
+    }, (_, s, i) => s.filter(col("ir") === i).isEmpty)
+    if (!res.converged) throw new IllegalStateException(
       s"ssspWeighted: improvements persist after $maxIters rounds — " +
         "raise maxIters (and the oracle's hop bound) rather than " +
         "accepting truncated distances")
+    (fx.back(res.state.select("id", "dist")), res.rounds)
   }
 }

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Scale-adaptive physical-layout helpers shared by the operator families
@@ -49,68 +49,6 @@ object Scale {
     * Batch-only: a streaming frame cannot answer `.rdd` — streaming
     * callers already receive micro-batch parallelism from the source.
     */
-  /** Rows-per-reduce-partition target for [[loopConf]]'s derived
-    * in-loop shuffle parallelism — sized so a partition of narrow
-    * (id, long) state rows lands well inside the guide §2.2 "fewer,
-    * larger partitions" band. Overridable per session via
-    * `spark.graft.loop.rowsPerPartition`. */
-  private val LoopRowsPerPartition = 200000L
-
-  /** Run a synchronous BSP fixpoint loop under loop-scoped execution
-    * settings, restoring the session's settings afterwards (guide §1.2
-    * step 3 — configuration, applied ONLY where steps 1-2 left a
-    * measured driver-side floor; r18).
-    *
-    * A blocked BSP loop executes dozens of tiny synchronous rounds:
-    * with AQE on, EVERY per-round exchange materializes as its own
-    * Spark job (round 17 measured graph_pagerank_converged at 290 jobs,
-    * with ~45% of wall-clock in the driver gaps BETWEEN jobs), and the
-    * per-job planning/submission latency — not data movement — is the
-    * measured cost at any state size where a round's shuffle fits a few
-    * partitions. The loop-scoped settings:
-    *
-    *  - `spark.sql.adaptive.enabled = false` (default; re-enable per
-    *    session via `spark.graft.loop.aqe = true` for regimes where
-    *    within-round re-optimization pays): one job per action instead
-    *    of one per exchange. AQE's in-loop value is limited BY
-    *    CONSTRUCTION here: loop bodies are fixed-shape key-partitioned
-    *    joins/aggregates whose sizes the caller already bounds, and the
-    *    round output is localCheckpointed so there is no cross-round
-    *    plan for AQE to re-optimize.
-    *  - `spark.sql.shuffle.partitions` derived from the CALLER-COUNTED
-    *    state rows (`stateRows / rowsPerPartition`, clamped to
-    *    [1, session setting]) — the scale-adaptive part: at fixture
-    *    scale a 15k-edge loop runs 1-partition rounds (one task per
-    *    stage instead of 32 idle-ish ones), while a 100 TB edge table
-    *    derives the session's full parallelism unchanged. The session
-    *    value is the CAP, never raised, so cluster sizing stays the
-    *    deployment's call.
-    *
-    * The body must EXECUTE its per-round actions inside `body` (the
-    * loops' checkpoint-per-block discipline already does); a frame
-    * RETURNED out of the loop executes under the restored session
-    * settings.
-    */
-  def loopConf[T](spark: SparkSession, stateRows: Long)(body: => T): T = {
-    val conf = spark.conf
-    val aqeSaved = conf.get("spark.sql.adaptive.enabled", "true")
-    val partsSaved = conf.get("spark.sql.shuffle.partitions", "200")
-    val rowsPer = conf.get("spark.graft.loop.rowsPerPartition",
-      LoopRowsPerPartition.toString).toLong
-    val cap = math.max(1, partsSaved.toInt)
-    val derived = math.max(1L, math.min(cap.toLong,
-      (math.max(stateRows, 1L) + rowsPer - 1) / rowsPer)).toInt
-    val aqeInLoop = conf.get("spark.graft.loop.aqe", "false").toBoolean
-    try {
-      if (!aqeInLoop) conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.shuffle.partitions", derived.toString)
-      body
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", aqeSaved)
-      conf.set("spark.sql.shuffle.partitions", partsSaved)
-    }
-  }
-
   def fanout(df: DataFrame): DataFrame = {
     // Self-enforcing batch-only contract (ADVICE r17): touching
     // queryExecution.optimizedPlan on a streaming frame throws a

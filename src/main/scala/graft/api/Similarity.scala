@@ -269,7 +269,7 @@ object Similarity {
     val base = cap.fold(
       knnGraph(corpus, idCol, vecCol, k, tables, bits, dim))(c =>
       knnGraphCapped(corpus, idCol, vecCol, k, tables, bits, dim, c))
-    var edges = base
+    val edges0 = base
       .select(col("src_id"), col("neighbor_id")).localCheckpoint()
     // r18 loop hoist: the normed corpus is computed + checkpointed ONCE
     // and every round's exact-cosine rank pass reads it, instead of
@@ -277,17 +277,17 @@ object Similarity {
     // (src + neighbor side) for every round of the loop.
     val eN = withNorm(corpus, vecCol)
       .select(col(idCol), col(vecCol), col("nrm")).localCheckpoint()
-    // Round 1 treats every edge as new — identical to the full NoN
-    // expansion (and to the oracle's unrolled round 1).
-    var fresh = edges
-    var it = 0
-    // r18: NN-Descent rounds run under loop-scoped settings (Scale.loopConf
-    // — AQE off, shuffle parallelism derived from the checkpointed edge
-    // count; see Graphs.pagerankConvergedWithRound's note for the measured
+    // r18: NN-Descent rounds run under the loop settings (Fixpoint — AQE
+    // off, shuffle parallelism derived from the checkpointed edge count;
+    // see Graphs.pagerankConvergedWithRound's note for the measured
     // why). The per-round candidate table is O(edges · k), so the derived
     // partition count is sized by edges × k, not the bare edge count.
-    Scale.loopConf(corpus.sparkSession, edges.count() * math.max(k, 1)) {
-    while (it < maxIters) {
+    val fx = new Fixpoint(corpus.sparkSession, edges0.count() * math.max(k, 1))
+    // the loop state: the current edges, the edges new in the last round
+    // (filled in by the block's materialization), and the ranked plan the
+    // edges were cut from (what the loop returns)
+    case class Nnd(edges: DataFrame, fresh: DataFrame, ranked: DataFrame)
+    def refine(s: Nnd): Nnd = {
       // Dong et al.'s incremental rule, EXACT here: a candidate pair
       // whose connecting hops are both OLD was already offered in an
       // earlier round and lost to a per-source top-k that has only
@@ -296,40 +296,42 @@ object Similarity {
       // the candidate set), so it can never enter later — only pairs
       // through at least one new edge need expanding. Late rounds cost
       // O(delta · k), not O(n · k²).
-      val undAll = und(edges)
-      val undNew = und(fresh)
+      val undAll = und(s.edges)
+      val undNew = und(s.fresh)
       val non = undNew.select(col("src_id").as("a"), col("neighbor_id").as("b"))
         .join(undAll.select(col("src_id").as("b"), col("neighbor_id").as("c")), "b")
         .union(undAll.select(col("src_id").as("a"), col("neighbor_id").as("b"))
           .join(undNew.select(col("src_id").as("b"), col("neighbor_id").as("c")), "b"))
         .filter(col("a") =!= col("c"))
         .select(col("a").as("src_id"), col("c").as("neighbor_id"))
-      val cand = non.union(edges).distinct()
+      val cand = non.union(s.edges).distinct()
       val ranked = knnRankTopKNormed(eN, idCol, vecCol, cand, k)
-      val next = ranked.select(col("src_id"), col("neighbor_id")).localCheckpoint()
-      // r18 probe fusion: the NEW-EDGE set `next \ edges` doubles as the
-      // convergence probe — it is empty iff next == edges, because
-      // next(src) is a top-k over a candidate set that CONTAINS
-      // edges(src), so |next(src)| = min(k, |cand(src)|) >=
-      // |edges(src)| per source: next ⊆ edges forces next = edges.
-      // One anti-join job per round replaces the former
-      // union + group-count symmetric difference (two shuffles), and
-      // materializing `fresh` here removes its 4x lazy re-run in the
-      // next round's plan (und(fresh) twice x the two non branches).
-      val freshNext = next.except(edges).localCheckpoint()
-      val d = freshNext.count()
-      // fixpoint: `ranked` plans over the CHECKPOINTED edges, so the
-      // returned frame re-runs one refine body, not the whole history
-      if (d == 0L) return (ranked, it + 1)
-      fresh = freshNext
-      edges = next
-      it += 1
+      Nnd(ranked.select(col("src_id"), col("neighbor_id")), s.fresh, ranked)
     }
-    } // Scale.loopConf
-    throw new IllegalStateException(
+    // r18 probe fusion: the NEW-EDGE set `next \ edges` doubles as the
+    // convergence probe — it is empty iff next == edges, because
+    // next(src) is a top-k over a candidate set that CONTAINS
+    // edges(src), so |next(src)| = min(k, |cand(src)|) >=
+    // |edges(src)| per source: next ⊆ edges forces next = edges.
+    // One anti-join job per round replaces the former
+    // union + group-count symmetric difference (two shuffles), and
+    // materializing `fresh` here removes its 4x lazy re-run in the
+    // next round's plan (und(fresh) twice x the two non branches).
+    def materialize(prev: Nnd, next: Nnd): Nnd = {
+      val e = fx.checkpoint(next.edges)
+      Nnd(e, e.except(prev.edges).localCheckpoint(), next.ranked)
+    }
+    // Round 1 treats every edge as new — identical to the full NoN
+    // expansion (and to the oracle's unrolled round 1).
+    val res = fx.run(Nnd(edges0, edges0, edges0), maxIters)((s, _) => refine(s),
+      materialize, (_, s, _) => s.fresh.count() == 0L)
+    if (!res.converged) throw new IllegalStateException(
       s"knnGraphConverged: no fixpoint after $maxIters NN-Descent rounds " +
         "— raise maxIters (and the oracle's unroll depth) rather than " +
         "accepting a truncated graph")
+    // fixpoint: `ranked` plans over the CHECKPOINTED edges, so the
+    // returned frame re-runs one refine body, not the whole history
+    (fx.back(res.state.ranked), res.rounds)
   }
 
   /** Shared CTE chain of the k-NN graph oracles: quantized vectors,

@@ -1,8 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ClassicConversions, Dataset, ExpressionUtils}
 
 /** Minimal bridge into `private[sql]` surface — the standard pattern for
   * Spark extension libraries that ship custom Catalyst expressions
@@ -29,4 +29,16 @@ object Bridge {
     f(ext)
     ext.registerFunctions(spark.sessionState.functionRegistry)
   }
+
+  /** A clone of `spark` with a conf of its own: extensions, registered
+    * functions and the current settings carry over, and a setting made
+    * later on either session stays on that session. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    ClassicConversions.castToImpl(spark).cloneSession()
+
+  /** `df`'s analyzed plan as a frame of `spark`: its actions are planned
+    * and run under `spark`'s settings (the `Dataset.ofRows` factory). */
+  def ofRows(spark: SparkSession, df: DataFrame): DataFrame =
+    Dataset.ofRows(ClassicConversions.castToImpl(spark),
+      ClassicConversions.castToImpl(df).logicalPlan)
 }

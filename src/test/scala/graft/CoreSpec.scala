@@ -289,6 +289,16 @@ class CoreSpec extends SparkSuite {
       "number of times")) == Result.NEUTRAL)
   }
 
+  test("bench timing: a key that throws is a failure, never a time") {
+    assert(Bench.timeKey(spark, sf001, (s, _) => s.range(10).toDF()).exists(_ >= 0.0))
+    // thrown while building the frame...
+    assert(Bench.timeKey(spark, sf001,
+      (_, _) => throw new IllegalStateException("build failed")).isEmpty)
+    // ...and thrown by the counted action itself
+    assert(Bench.timeKey(spark, sf001,
+      (s, _) => s.range(3).toDF().filter(assert_true(col("id") < 0).isNull)).isEmpty)
+  }
+
   test("bench isolated-pass machinery: committed-value parse and trigger rule") {
     // The adjudication path only fires on a contended host, so a clean
     // local run never exercises it — pin both halves here (VERDICT r7

@@ -145,6 +145,11 @@ class PipelineSpec extends SparkSuite {
     info(s"single-shot capped base recall@5 = $baseRecall")
     assert(recall >= baseRecall,
       "NN-Descent rounds must not lose recall vs the capped base")
+    // a budget below the convergence round is a loud failure, never a
+    // truncated graph
+    intercept[IllegalStateException](graft.api.Similarity.knnGraphConvergedWithRound(
+      corpus, "vec_id", "embedding", 5, tables = 8, bits = 6, dim = 16,
+      maxIters = round - 1, cap = Some(16)))
   }
 
   test("embed LSH pairs: subset of brute-force global pairs, recall pinned") {
@@ -1106,6 +1111,56 @@ class PipelineSpec extends SparkSuite {
       val n = sym.count { case (s, t) => s == v && layer0(t) }
       assert(n >= 2, s"core member $v has only $n core neighbors")
     }
+    // budget edge: a cascade whose deepest layer lands exactly on
+    // maxIters has converged (the post-loop boundary probe certifies
+    // it); one round less is a loud failure
+    val (atBudget, budgetRound) = Graphs.kcoreWithRound(edges.toDF("s", "t"),
+      "s", "t", k = 2, maxIters = 4)
+    assert(atBudget.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap == want)
+    assert(budgetRound == 4)
+    intercept[IllegalStateException](Graphs.kcoreWithRound(edges.toDF("s", "t"),
+      "s", "t", k = 2, maxIters = 3))
+  }
+
+  test("fixpoint loop settings stay on a private session, never the caller's") {
+    import graft.api.{Fixpoint, Graphs}
+    val aqe = "spark.sql.adaptive.enabled"
+    val parts = "spark.sql.shuffle.partitions"
+    def settings(): (String, String) = (spark.conf.get(aqe), spark.conf.get(parts))
+    val before = settings()
+    // read the caller's settings from inside every round and probe
+    val seen = scala.collection.mutable.Buffer.empty[(String, String)]
+    val fx = new Fixpoint(spark, stateRows = 10)
+    val res = fx.frames(spark.range(4).toDF(), maxIters = 3)((s, _) => {
+      seen += settings()
+      s.select((col("id") + 1).as("id"))
+    }, (_, s, _) => { seen += settings(); s.count() < 0 })
+    assert(seen.size == 6 && seen.forall(_ == before),
+      s"the caller's settings changed inside the loop: $seen (before $before)")
+    assert(!res.converged && res.rounds == 3)
+    assert(res.state.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L, 5L, 6L))
+    // the loop's own materialization ran under the loop settings...
+    assert(res.state.sparkSession.conf.get(aqe) == "false")
+    assert(res.state.sparkSession.conf.get(parts) == "1")
+    // ...and what a loop hands back is the caller's
+    assert(fx.back(res.state).sparkSession eq spark)
+    // the same through a public loop, with the caller's settings read
+    // from another thread for as long as the loop runs
+    val rnd = new scala.util.Random(7)
+    val edges = (for (a <- 0 until 20; b <- 0 until 20 if a != b && rnd.nextInt(100) < 15)
+      yield (a.toLong, b.toLong)).toDF("src", "dst")
+    val nodes = spark.range(20).select(col("id").as("nid"))
+    import scala.concurrent.{Await, Future, ExecutionContext}
+    import scala.concurrent.duration._
+    val loop = Future(Graphs.pagerankConvergedWithRound(nodes, "nid", edges,
+      "src", "dst", blockSize = 1))(ExecutionContext.global)
+    val during = scala.collection.mutable.Set.empty[(String, String)]
+    while (!loop.isCompleted) { during += settings(); Thread.sleep(1) }
+    val (ranks, _) = Await.result(loop, 5.minutes)
+    assert(during.forall(_ == before),
+      s"a concurrent reader saw the loop settings: $during (before $before)")
+    assert(ranks.sparkSession eq spark)
+    assert(settings() == before)
   }
 
   test("pagerank: integer fixed-point equals a local reference; partition-invariant") {
@@ -1276,6 +1331,10 @@ class PipelineSpec extends SparkSuite {
     val once = (0 until n).map(i =>
       i.toLong -> (base + (85L * in1.getOrElse(i.toLong, 0L)) / 100L)).toMap
     assert(once == ranks, "F(fixpoint) != fixpoint")
+    // a budget below the first flat round is a loud failure
+    val short = intercept[IllegalStateException](Graphs.pagerankConvergedWithRound(
+      nodesDf, "nid", edgesDf, "src", "dst", maxIters = refRound - 1, scale = scale))
+    assert(short.getMessage.contains("no integer fixpoint"), short.getMessage)
   }
 
   test("sssp: BFS levels equal a scalar reference; closure and round certified") {
@@ -1319,6 +1378,9 @@ class PipelineSpec extends SparkSuite {
       edgesDf.repartition(7), "src", "dst", blockSize = 3)._1
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got2 == got, "sssp is partitioning-dependent")
+    // a budget below the frontier-emptying round is a loud failure
+    intercept[IllegalStateException](Graphs.ssspWithRound(seedsDf, "nid",
+      edgesDf, "src", "dst", maxIters = level - 1, blockSize = 3))
   }
 
   test("ssspWeighted: Bellman-Ford fixpoint equals a scalar reference; improvement after discovery") {
@@ -1366,6 +1428,11 @@ class PipelineSpec extends SparkSuite {
       "fixture too small: weighted distances all equal hop counts")
     // round stays within the certified band of the scalar settling
     assert(round <= rounds + 3, s"round bound $round vs scalar $rounds")
+    // a budget below the emptying round is a loud failure: the certified
+    // round is within blockSize - 1 of it, so round - blockSize is below
+    intercept[IllegalStateException](Graphs.ssspWeightedWithRound(
+      seeds.toDF("nid"), "nid", edges.toDF("src", "dst", "w"),
+      "src", "dst", "w", maxIters = round - 3, blockSize = 3))
   }
 
   test("repetition signals: exact fractions on a hand-built doc") {
