@@ -681,10 +681,10 @@ object Dedup {
     * compression ever engages; a pathological long chain (progressively
     * edited copies) flips into O(log diameter) doubling instead of
     * failing — `maxRounds = 20` then covers diameters ~2^17,
-    * unreachable for any real near-dup graph. Each round ends in a
-    * `localCheckpoint` so round N's plan doesn't replay rounds 1..N-1
-    * (on a cluster, a reliable `checkpoint` dir serves the same
-    * purpose).
+    * unreachable for any real near-dup graph. Each round is ONE Spark
+    * job that materializes the labels (so round N's plan doesn't replay
+    * rounds 1..N-1) and counts the changed ones (the [[Fixpoint]]
+    * probe).
     *
     * If the round budget is ever exhausted before convergence, the
     * remaining labels are finished by [[starContract]] (alternating
@@ -694,24 +694,26 @@ object Dedup {
   def clusters(nodes: DataFrame, idCol: String, pairs: DataFrame,
                aCol: String = "doc_a", bCol: String = "doc_b",
                maxRounds: Int = 20, jumpAfter: Int = 3): DataFrame = {
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+    // r18: propagation rounds run under the loop settings (Fixpoint —
+    // AQE off, shuffle parallelism derived from the edge count that the
+    // edges' one materialization takes; see
+    // Graphs.pagerankConvergedWithRound's note for the measured why). The
+    // loop is sized by the near-dup subgraph, so the derived partition
+    // count follows the edge table.
+    val (fx, edgesIn) = Fixpoint.over(pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct().localCheckpoint()
+      .distinct())
+    val edges = edgesIn.state
     // Iterate ONLY over edge-touched nodes: singletons (the vast majority
     // of a mostly-unique corpus) can never change label, so they skip the
     // loop entirely and rejoin at the end — every round's join, shuffle
     // and checkpoint is sized by the near-dup subgraph, not the corpus.
+    // The seed labels are computed by the first round's job.
     val labels0 = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
-      .localCheckpoint()
-    // r18: propagation rounds run under the loop settings (Fixpoint —
-    // AQE off, shuffle parallelism derived from the checkpointed edge
-    // count; see Graphs.pagerankConvergedWithRound's note for the
-    // measured why). The loop is sized by the near-dup subgraph, so the
-    // derived partition count follows the edge table. Each round is
-    // checkpointed with a `chg` flag; no changed label is the fixpoint.
-    val fx = new Fixpoint(edges.sparkSession, edges.count())
-    val res = fx.frames(labels0, maxRounds)((s, i) => {
+    // Each round is checkpointed with a `chg` flag, counted by the same
+    // job; no changed label is the fixpoint.
+    val res = fx.run(labels0, maxRounds)((s, i) => {
       val labels = s.select("id", "comp")
       val prop = edges.join(labels, col("src") === col("id"))
         .groupBy(col("dst")).agg(min("comp").as("ncomp"))
@@ -731,7 +733,7 @@ object Dedup {
             (least(stepped("comp"), coalesce(par("pcomp"), stepped("comp"))) <
               col("prev")).as("chg"))
       }
-    }, (_, next, _) => next.filter(col("chg")).count() == 0L)
+    }, _ => Seq(count(when(col("chg"), 1))))((_, b, _) => b.probes.getLong(0) == 0L)
     var labels = res.state.select("id", "comp")
     if (!res.converged) {
       // Round budget exhausted (a graph whose diameter outruns even the
@@ -787,22 +789,22 @@ object Dedup {
         .filter(col("v") =!= col("m"))
         .select(col("v").as("src"), col("m").as("dst")).distinct()
     }
-    val e0 = edges0.filter(col("src") =!= col("dst"))
-      .select("src", "dst").distinct().localCheckpoint()
-    var n = e0.count()
     // r18: contraction alternations under the loop settings (see
     // Graphs.pagerankConvergedWithRound's note for the measured why)
-    val fx = new Fixpoint(e0.sparkSession, n)
-    // exact set-equality fixpoint test: equal counts + empty diff (both
-    // sides are distinct); the fallback path trades these two cheap
-    // extra jobs for a guarantee, not for speed. An empty edge set is
-    // already the fixpoint: no alternation runs.
+    val (fx, in) = Fixpoint.over(edges0.filter(col("src") =!= col("dst"))
+      .select("src", "dst").distinct())
+    val e0 = in.state
+    var n = in.rows
+    // exact set-equality fixpoint test: equal counts (each taken by the
+    // job that materializes its block) + empty diff (both sides are
+    // distinct); the fallback path trades the diff's extra job for a
+    // guarantee, not for speed. An empty edge set is already the
+    // fixpoint: no alternation runs.
     val res =
-      if (n == 0) Fixpoint.Outcome(e0, 0, converged = true)
-      else fx.frames(e0, cap)((s, _) => smallStar(largeStar(s)), (prev, next, _) => {
-        val n2 = next.count()
-        val stable = n2 == n && next.except(prev).isEmpty
-        n = n2
+      if (n == 0) Fixpoint.Outcome(e0, 0, converged = true, None)
+      else fx.run(e0, cap)((s, _) => smallStar(largeStar(s)))((prev, b, _) => {
+        val stable = b.rows == n && b.state.except(prev).isEmpty
+        n = b.rows
         stable
       })
     // Large-star/small-star provably converges in O(log n) alternations, so

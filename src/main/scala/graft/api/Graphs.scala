@@ -64,7 +64,12 @@ object Graphs {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outd"))
-    val eo = e.join(outdeg, "src").localCheckpoint() // edges are reused every round
+    // every round is materialized under the loop settings (Fixpoint —
+    // AQE off, shuffle parallelism derived from the edge count, taken by
+    // the job that materializes the edges once for every round; see
+    // pagerankConvergedWithRound's note for the measured why)
+    val (fx, eoIn) = Fixpoint.over(e.join(outdeg, "src"))
+    val eo = eoIn.state
     val n = ids.count() // bounded: one scalar to the driver
     require(n > 0, "pagerank over an empty node set")
     val r0 = scale / n
@@ -75,12 +80,8 @@ object Graphs {
       if (!redistributeDangling) null
       else ids.join(eo.select(col("src").as("id")), Seq("id"), "left_anti")
         .localCheckpoint()
-    // every round is materialized under the loop settings (Fixpoint —
-    // AQE off, shuffle parallelism derived from the checkpointed edge
-    // count; see pagerankConvergedWithRound's note for the measured why);
     // a fixed round count is a normal end, never a spent budget
-    val fx = new Fixpoint(ids.sparkSession, eo.count())
-    fx.back(fx.frames(ids.select(col("id"), lit(r0).as("r")), iters)((ranks, _) => {
+    fx.back(fx.run(ids.select(col("id"), lit(r0).as("r")), iters)((ranks, _) => {
       val contribs = eo.join(ranks, eo("src") === ranks("id"))
         .select(col("dst").as("id"), expr("r div outd").as("c"))
         .groupBy("id").agg(sum(col("c")).as("s"))
@@ -100,7 +101,7 @@ object Graphs {
             (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")
               + expr(s"(85 * dsum) div ${100L * n}")).as("r"))
       }
-    }, (_, _, _) => false).state)
+    })((_, _, _) => false).state)
   }
 
   /** Per-node TRIANGLE counts over a directed edge list (the local
@@ -180,15 +181,16 @@ object Graphs {
     *
     * The returned round is a CERTIFIED UPPER BOUND on the exact
     * first-flat round, within `blockSize - 1` of it: rounds run in
-    * BLOCKS of `blockSize` chained lazily — ONE localCheckpoint and
-    * ONE symmetric-difference count per block instead of per round —
-    * and monotonicity makes the block check exact: if the block's
+    * BLOCKS of `blockSize` — ONE Spark job per block that materializes
+    * the block's ranks and sums them (the [[Fixpoint]] probe) — and
+    * monotonicity makes the block check exact: if the block's
     * endpoint ranks are equal, every intermediate round was equal too
     * (a non-decreasing chain with equal endpoints is constant), so
     * the block-start ranks already ARE the least fixpoint and any
     * oracle unroll >= the reported round replays them. Blocking cuts
-    * the per-round driver latency (a job per checkpoint + a job per
-    * count — 18.6 s unblocked vs 12.2 s at n=2000); the REMAINING
+    * the per-round driver latency (18.6 s unblocked vs 12.2 s at
+    * n=2000, measured when a block still cost a checkpoint job and a
+    * probe job); the REMAINING
     * cost is the ~log_{100/85}(base) synchronous shuffle rounds
     * themselves (~0.25 s each at local[32]), intrinsic to an exact
     * BSP fixpoint — block size 3/4/6 measure within noise of each
@@ -197,8 +199,8 @@ object Graphs {
     * exactness-first scorer.
     *
     * Scale: per block one src-keyed join + one dst-keyed combine per
-    * round (chained lazily), one checkpoint, one key-partitioned
-    * symmetric-difference count (the single driver scalar). The round
+    * round, one checkpoint whose job also sums the ranks (the single
+    * driver scalar). The round
     * count is BOUNDED BY log_{100/85}(base) plus the graph's mixing
     * time — at fixed scale the base term shrinks as n grows, but on a
     * sharded corpus the certified round is the max over shards (an
@@ -232,7 +234,14 @@ object Graphs {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outd"))
-    val eo = e.join(outdeg, "src").localCheckpoint()
+    // r18: the ~30 synchronous rounds execute under the loop settings
+    // (Fixpoint — AQE off, shuffle parallelism derived from the edge
+    // count): round 17 profiled this loop at 290 jobs with ~45% of
+    // wall-clock in driver gaps between them; the loop body is a
+    // fixed-shape keyed join + combine whose size is bounded by the edge
+    // table, so per-round re-optimization has nothing to decide.
+    val (fx, eoIn) = Fixpoint.over(e.join(outdeg, "src"))
+    val eo = eoIn.state
     val n = ids.count()
     require(n > 0, "pagerankConverged over an empty node set")
     // scale = 0 (the default) derives the scale from n via [[autoScale]]
@@ -248,7 +257,7 @@ object Graphs {
       s"pagerankConverged: scale=$sc is too coarse for n=$n nodes " +
         "(the per-node base floors to 0, so every rank would be 0) — " +
         "raise scale proportionally to n")
-    val ranks0 = ids.select(col("id"), lit(base).as("r")).localCheckpoint()
+    val ranks0 = ids.select(col("id"), lit(base).as("r"))
     def oneRound(r: DataFrame): DataFrame = {
       val contribs = eo.join(r, eo("src") === r("id"))
         .select(col("dst").as("id"), expr("r div outd").as("c"))
@@ -260,19 +269,16 @@ object Graphs {
     // r17 convergence probe (guide §1.2): the rank chain is pointwise
     // NON-DECREASING (monotone map from the bottom seed — the Kleene
     // argument above), so two rank tables along the chain are equal iff
-    // their SUMS are equal. One scalar aggregate over the block's
-    // checkpoint replaces the union + group-count symmetric-difference
-    // job (two extra shuffles) per block. Overflow-safe: Σr <= scale
-    // <= 1e18 (autoScale caps n at 1e16). (The union-seeded round body
+    // their SUMS are equal. One scalar aggregate, observed by the job
+    // that materializes the block, replaces the union + group-count
+    // symmetric-difference job (two extra shuffles) per block.
+    // Overflow-safe: Σr <= scale <= 1e18 (autoScale caps n at 1e16).
+    // (The union-seeded round body
     // tried alongside this was MEASURED SLOWER than the left-join form
     // — 10.3 s vs 4.9 s profiled at sf0.1 — and was reverted; see
     // OPTIMIZATION_r17.md.)
     var prevSum = n * base // the seed's sum: n rows of `base`
-    def flat(next: DataFrame): Boolean = {
-      // coalesce: locally total even on an empty rank table (sum over
-      // zero rows is SQL NULL; reaching it would
-      // otherwise rely on the distant require(n > 0))
-      val s = next.agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
+    def flat(s: Long): Boolean = {
       // The sum probe is sound ONLY because the rank chain is pointwise
       // non-decreasing (Kleene from the bottom seed, no dangling
       // reflow). Guard the invariant: any future edit
@@ -287,15 +293,11 @@ object Graphs {
       prevSum = s
       same
     }
-    // r18: the ~30 synchronous rounds execute under the loop settings
-    // (Fixpoint — AQE off, shuffle parallelism derived from the
-    // checkpointed edge count): round 17 profiled this loop at 290 jobs
-    // with ~45% of wall-clock in driver gaps between them; the loop body
-    // is a fixed-shape keyed join + combine whose size is bounded by the
-    // edge table, so per-round re-optimization has nothing to decide.
-    val fx = new Fixpoint(ids.sparkSession, eo.count())
-    val res = fx.frames(ranks0, maxIters, blockSize)((r, _) => oneRound(r),
-      (_, next, _) => flat(next))
+    // coalesce: locally total even on an empty rank table (sum over zero
+    // rows is SQL NULL; reaching it would otherwise rely on the distant
+    // require(n > 0))
+    val res = fx.run(ranks0, maxIters, blockSize)((r, _) => oneRound(r),
+      _ => Seq(coalesce(sum(col("r")), lit(0L))))((_, b, _) => flat(b.probes.getLong(0)))
     if (!res.converged) throw new IllegalStateException(
       s"pagerankConverged: no integer fixpoint after $maxIters rounds — " +
         "raise maxIters (and the oracle's unroll depth) rather than " +
@@ -329,10 +331,10 @@ object Graphs {
     * confluent chaotic iteration), so the synchronous rounds here and
     * the oracle's unrolled alive-set replay reach the identical
     * fixpoint. An empty frontier IS the fixpoint: no remaining node
-    * can ever fall below k. Rounds run in lazily-chained BLOCKS of
-    * `blockSize` with one localCheckpoint + one emptiness probe per
-    * block (the pagerankConverged discipline); LOUD failure past
-    * `maxIters`, never a silently truncated peel.
+    * can ever fall below k. Rounds run in BLOCKS of `blockSize`, one
+    * Spark job per block that materializes the state and counts the
+    * last round's new layer (the [[Fixpoint]] discipline); LOUD
+    * failure past `maxIters`, never a silently truncated peel.
     *
     * Output: the full ONION DECOMPOSITION (id, layer) — layer = the
     * synchronous peel round that removed the node (1 = fell below k in
@@ -354,18 +356,23 @@ object Graphs {
     require(k >= 1, s"k must be >= 1: $k")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    // symmetrize + dedup: degree = out-degree in the undirected edge set
-    val eg = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint(false)
+    // symmetrize + dedup: degree = out-degree in the undirected edge set.
+    // r18: peel rounds run under the loop settings (Fixpoint — AQE off,
+    // parallelism derived from the edge count taken by the job that
+    // materializes the symmetrized edges)
+    val (fx, egIn) = Fixpoint.over(
+      e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+        .filter(col("src") =!= col("dst")).distinct())
+    val eg = egIn.state
     // ONE state table carries the whole peel — (id, deg, layer) with
     // layer NULL while alive — so each block materializes ONE
     // checkpoint instead of three separately-recomputed chains
     // (deg/frontier/layers as distinct DataFrames tripled the block's
-    // executed work; measured 16.9 s -> the fused form at sf0.1)
+    // executed work; measured 16.9 s -> the fused form at sf0.1). The
+    // seed is computed by the first block's job.
     val st0 = eg.groupBy("src").agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"),
         when(col("deg") < k, 1).otherwise(lit(null)).cast("int").as("layer"))
-      .localCheckpoint()
     // peel round i: the nodes of layer i - 1 drop out, and every alive
     // node that falls below k gets layer i
     def peel(s: DataFrame, i: Int): DataFrame = {
@@ -382,17 +389,14 @@ object Graphs {
             when(col("deg") - coalesce(col("lostn"), lit(0L)) < k,
               lit(i))).cast("int").as("layer"))
     }
-    // r18: peel rounds run under the loop settings (Fixpoint — AQE off,
-    // parallelism derived from the materialized edge count; eg was
-    // materialized by st0's eager checkpoint above, so the count is a
-    // cached-RDD read, not a recompute). Layer 1 is assigned above, so
-    // it counts against maxIters. Fixpoint probe: the LAST
-    // round assigned no layer => the next frontier is empty — nothing
-    // can ever fall below k (mid-block emptying leaves later in-block
-    // rounds as no-ops).
-    val fx = new Fixpoint(eg.sparkSession, eg.count())
-    val res = fx.frames(st0, maxIters, blockSize, start = 1)(peel,
-      (_, s, i) => s.filter(col("layer") === i).isEmpty)
+    // Layer 1 is assigned above, so it counts against maxIters. Fixpoint
+    // probe: the LAST round assigned no layer => the next frontier is
+    // empty — nothing can ever fall below k (mid-block emptying leaves
+    // later in-block rounds as no-ops). The block's job also observes
+    // the deepest layer so far, the depth this call reports.
+    val res = fx.run(st0, maxIters, blockSize, start = 1)(peel,
+      i => Seq(count(when(col("layer") === i, 1)), max(col("layer"))))(
+      (_, b, _) => b.probes.getLong(0) == 0L)
     val st = fx.on(res.state)
     // Post-loop boundary probe (ADVICE r16): the in-loop probe only
     // certifies a fixpoint when the final block's LAST round assigned
@@ -408,14 +412,15 @@ object Graphs {
           "(and the oracle's unroll depth) rather than accepting a " +
           "truncated core")
     val done = st.select(col("id"), coalesce(col("layer"), lit(0)).as("layer"))
-    // certified peel depth = the deepest assigned layer (one tiny scalar
-    // job); the oracle's unroll R is sound iff R >= this
-    val maxLayer = done.agg(max(when(col("layer") > 0, col("layer"))))
-      .head().get(0) match {
-        case null => 0
-        case v: Int => v
-      }
-    (fx.back(done), maxLayer)
+    // certified peel depth = the deepest assigned layer (observed by the
+    // last block's job; one scalar job only when no block ran); the
+    // oracle's unroll R is sound iff R >= this
+    val deepest = res.probes.map(_.get(1))
+      .getOrElse(st.agg(max(col("layer"))).head().get(0))
+    (fx.back(done), deepest match {
+      case null => 0
+      case v: Int => v
+    })
   }
 
   /** Multi-source SHORTEST PATHS (unit weights — BFS levels) to the
@@ -435,12 +440,12 @@ object Graphs {
     * O(V·E) into BFS's O(E). Termination is by construction: the
     * reached set grows monotonically and is bounded by n, and an
     * empty frontier IS the least fixpoint (no relaxation can ever
-    * fire again). Rounds run in lazily-chained BLOCKS of `blockSize`
-    * with one localCheckpoint + one count per block (the
-    * pagerankConverged discipline); rounds past an in-block empty
-    * frontier are no-ops, so the reported round is an upper bound
-    * within blockSize - 1 of the exact emptying round, and every
-    * distance in the output is < that round. Unreached nodes emit no
+    * fire again). Rounds run in BLOCKS of `blockSize`, one Spark job per
+    * block that materializes the state and counts the last round's
+    * newly reached nodes (the [[Fixpoint]] discipline); rounds past an
+    * in-block empty frontier are no-ops, so the reported round is an
+    * upper bound within blockSize - 1 of the exact emptying round, and
+    * every distance in the output is < that round. Unreached nodes emit no
     * row (infinite distance), matching the oracle's recursive
     * closure. LOUD failure past `maxIters` — never a silently
     * truncated frontier.
@@ -453,25 +458,25 @@ object Graphs {
   def ssspWithRound(seeds: DataFrame, idCol: String, edges: DataFrame,
                     srcCol: String, dstCol: String, maxIters: Int = 64,
                     blockSize: Int = 4): (DataFrame, Int) = {
-    // r18: eager checkpoint (was lazy) so the loop's edge count below
-    // reads the cached RDD instead of re-running the upstream kNN build
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).localCheckpoint()
+    // r18: BFS rounds under the loop settings (see
+    // pagerankConvergedWithRound's note for the measured why), sized by
+    // the edge count the edges' one materialization takes
+    val (fx, eIn) = Fixpoint.over(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")))
+    val e = eIn.state
     // ONE state table (id, dist, r) — r = the round that reached the
     // node — so the frontier is a cheap filter over the single
     // per-block checkpoint instead of a second separately-recomputed
-    // chain (the kcoreWithRound fusion; it halved this loop's wall)
-    val st0 = seeds.select(col(idCol).cast("long").as("id"),
-      lit(0).cast("int").as("dist"), lit(0).cast("int").as("r"))
-      .localCheckpoint()
-    // r18: BFS rounds under the loop settings (see
-    // pagerankConvergedWithRound's note for the measured why); round i
-    // expands the nodes reached in round i - 1. The LAST round's reached
-    // set empty => the next frontier is empty — the fixpoint (mid-block
-    // emptying leaves later in-block rounds as no-ops, so checking the
-    // final round alone is sound)
-    val fx = new Fixpoint(e.sparkSession, e.count())
-    val res = fx.frames(st0, maxIters, blockSize)((s, i) => {
+    // chain (the kcoreWithRound fusion; it halved this loop's wall). The
+    // caller's seeds are planned once and computed by the first block's
+    // job, which reads them three times.
+    val st0 = fx.on(seeds.select(col(idCol).cast("long").as("id"),
+      lit(0).cast("int").as("dist"), lit(0).cast("int").as("r"))).localCheckpoint(false)
+    // round i expands the nodes reached in round i - 1. The LAST round's
+    // reached set empty => the next frontier is empty — the fixpoint
+    // (mid-block emptying leaves later in-block rounds as no-ops, so
+    // checking the final round alone is sound)
+    val res = fx.run(st0, maxIters, blockSize)((s, i) => {
       val f = s.filter(col("r") === i - 1).select("id", "dist")
       val nf = e.join(f, e("src") === f("id"))
         .select(col("dst").as("id"), (col("dist") + 1).as("nd"))
@@ -479,7 +484,7 @@ object Graphs {
         .join(s.select("id"), Seq("id"), "left_anti")
         .select(col("id"), col("dist"), lit(i).cast("int").as("r"))
       s.union(nf)
-    }, (_, s, i) => s.filter(col("r") === i).isEmpty)
+    }, i => Seq(count(when(col("r") === i, 1))))((_, b, _) => b.probes.getLong(0) == 0L)
     if (!res.converged) throw new IllegalStateException(
       s"sssp: the frontier is still growing after $maxIters rounds — " +
         "raise maxIters (and the oracle's depth bound) rather than " +
@@ -514,20 +519,19 @@ object Graphs {
                             dstCol: String, wCol: String,
                             maxIters: Int = 64,
                             blockSize: Int = 4): (DataFrame, Int) = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"), col(wCol).cast("int").as("w"))
-      .localCheckpoint()
+    // r18: relaxation rounds under the loop settings (see
+    // pagerankConvergedWithRound's note for the measured why)
+    val (fx, eIn) = Fixpoint.over(edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"), col(wCol).cast("int").as("w")))
+    val e = eIn.state
     // ONE state table (id, dist, ir) — ir = the round of the node's
     // last improvement, so the improved-set frontier is a filter over
-    // the single per-block checkpoint
-    val st0 = seeds.select(col(idCol).cast("long").as("id"),
-      lit(0).cast("int").as("dist"), lit(0).cast("int").as("ir"))
-      .localCheckpoint()
-    // r18: relaxation rounds under the loop settings (see
-    // pagerankConvergedWithRound's note for the measured why); round i
-    // relaxes the edges out of the nodes improved in round i - 1
-    val fx = new Fixpoint(e.sparkSession, e.count())
-    val res = fx.frames(st0, maxIters, blockSize)((s, i) => {
+    // the single per-block checkpoint; the caller's seeds are planned
+    // once and computed by the first block's job
+    val st0 = fx.on(seeds.select(col(idCol).cast("long").as("id"),
+      lit(0).cast("int").as("dist"), lit(0).cast("int").as("ir"))).localCheckpoint(false)
+    // round i relaxes the edges out of the nodes improved in round i - 1
+    val res = fx.run(st0, maxIters, blockSize)((s, i) => {
       val f = s.filter(col("ir") === i - 1).select("id", "dist")
       val cand = e.join(f, e("src") === f("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("nd"))
@@ -538,7 +542,7 @@ object Graphs {
         .select(col("id"),
           when(better, col("nd")).otherwise(col("dist")).cast("int").as("dist"),
           when(better, lit(i)).otherwise(col("ir")).cast("int").as("ir"))
-    }, (_, s, i) => s.filter(col("ir") === i).isEmpty)
+    }, i => Seq(count(when(col("ir") === i, 1))))((_, b, _) => b.probes.getLong(0) == 0L)
     if (!res.converged) throw new IllegalStateException(
       s"ssspWeighted: improvements persist after $maxIters rounds — " +
         "raise maxIters (and the oracle's hop bound) rather than " +

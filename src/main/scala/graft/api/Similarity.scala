@@ -222,9 +222,10 @@ object Similarity {
     * refine round repeats until the edge set reaches its fixpoint — no
     * edge changed — with the same convergent-loop discipline as
     * `Dedup.clusters` (driver holds only the per-round delta counter;
-    * each round's edges `localCheckpoint` so round N's plan never
-    * replays — or nests — rounds 1..N-1 (one refine body references its
-    * base edges five times, so an uncut lineage grows 5^N); LOUD
+    * each round is ONE Spark job that materializes the ranked edges, so
+    * round N's plan never replays — or nests — rounds 1..N-1 (one
+    * refine body references its base edges five times, so an uncut
+    * lineage grows 5^N), and counts the edges the round added; LOUD
     * failure if `maxIters` rounds don't converge, never a silent
     * truncation). Because a fixpoint
     * round is idempotent, the converged output equals ANY fixed
@@ -269,25 +270,26 @@ object Similarity {
     val base = cap.fold(
       knnGraph(corpus, idCol, vecCol, k, tables, bits, dim))(c =>
       knnGraphCapped(corpus, idCol, vecCol, k, tables, bits, dim, c))
-    val edges0 = base
-      .select(col("src_id"), col("neighbor_id")).localCheckpoint()
+    // r18: NN-Descent rounds run under the loop settings (Fixpoint — AQE
+    // off, shuffle parallelism derived from the edge count taken by the
+    // job that materializes the base edges; see
+    // Graphs.pagerankConvergedWithRound's note for the measured why). The
+    // per-round candidate table is O(edges · k), so the derived partition
+    // count is sized by edges × k, not the bare edge count.
+    val (fx, in) = Fixpoint.over(base.select(col("src_id"), col("neighbor_id")),
+      weight = math.max(k, 1))
     // r18 loop hoist: the normed corpus is computed + checkpointed ONCE
     // and every round's exact-cosine rank pass reads it, instead of
     // re-scanning the corpus and re-deriving vec_norm twice per round
     // (src + neighbor side) for every round of the loop.
     val eN = withNorm(corpus, vecCol)
       .select(col(idCol), col(vecCol), col("nrm")).localCheckpoint()
-    // r18: NN-Descent rounds run under the loop settings (Fixpoint — AQE
-    // off, shuffle parallelism derived from the checkpointed edge count;
-    // see Graphs.pagerankConvergedWithRound's note for the measured
-    // why). The per-round candidate table is O(edges · k), so the derived
-    // partition count is sized by edges × k, not the bare edge count.
-    val fx = new Fixpoint(corpus.sparkSession, edges0.count() * math.max(k, 1))
-    // the loop state: the current edges, the edges new in the last round
-    // (filled in by the block's materialization), and the ranked plan the
-    // edges were cut from (what the loop returns)
-    case class Nnd(edges: DataFrame, fresh: DataFrame, ranked: DataFrame)
-    def refine(s: Nnd): Nnd = {
+    // the loop state: the ranked edges (src_id, rnk, neighbor_id, cos) —
+    // what the loop returns — with a `fresh` flag on each edge the last
+    // round added. Round 1 treats every base edge as new — identical to
+    // the full NoN expansion (and to the oracle's unrolled round 1).
+    val edges0 = in.state.withColumn("fresh", lit(true))
+    def refine(s: DataFrame): DataFrame = {
       // Dong et al.'s incremental rule, EXACT here: a candidate pair
       // whose connecting hops are both OLD was already offered in an
       // earlier round and lost to a per-source top-k that has only
@@ -296,42 +298,38 @@ object Similarity {
       // the candidate set), so it can never enter later — only pairs
       // through at least one new edge need expanding. Late rounds cost
       // O(delta · k), not O(n · k²).
-      val undAll = und(s.edges)
-      val undNew = und(s.fresh)
+      val edges = s.select(col("src_id"), col("neighbor_id"))
+      val undAll = und(edges)
+      val undNew = und(s.filter(col("fresh")).select(col("src_id"), col("neighbor_id")))
       val non = undNew.select(col("src_id").as("a"), col("neighbor_id").as("b"))
         .join(undAll.select(col("src_id").as("b"), col("neighbor_id").as("c")), "b")
         .union(undAll.select(col("src_id").as("a"), col("neighbor_id").as("b"))
           .join(undNew.select(col("src_id").as("b"), col("neighbor_id").as("c")), "b"))
         .filter(col("a") =!= col("c"))
         .select(col("a").as("src_id"), col("c").as("neighbor_id"))
-      val cand = non.union(s.edges).distinct()
-      val ranked = knnRankTopKNormed(eN, idCol, vecCol, cand, k)
-      Nnd(ranked.select(col("src_id"), col("neighbor_id")), s.fresh, ranked)
+      val cand = non.union(edges).distinct()
+      knnRankTopKNormed(eN, idCol, vecCol, cand, k)
+        .join(edges.withColumn("old", lit(true)), Seq("src_id", "neighbor_id"), "left")
+        .select(col("src_id"), col("rnk"), col("neighbor_id"), col("cos"),
+          col("old").isNull.as("fresh"))
     }
     // r18 probe fusion: the NEW-EDGE set `next \ edges` doubles as the
     // convergence probe — it is empty iff next == edges, because
     // next(src) is a top-k over a candidate set that CONTAINS
     // edges(src), so |next(src)| = min(k, |cand(src)|) >=
     // |edges(src)| per source: next ⊆ edges forces next = edges.
-    // One anti-join job per round replaces the former
-    // union + group-count symmetric difference (two shuffles), and
-    // materializing `fresh` here removes its 4x lazy re-run in the
-    // next round's plan (und(fresh) twice x the two non branches).
-    def materialize(prev: Nnd, next: Nnd): Nnd = {
-      val e = fx.checkpoint(next.edges)
-      Nnd(e, e.except(prev.edges).localCheckpoint(), next.ranked)
-    }
-    // Round 1 treats every edge as new — identical to the full NoN
-    // expansion (and to the oracle's unrolled round 1).
-    val res = fx.run(Nnd(edges0, edges0, edges0), maxIters)((s, _) => refine(s),
-      materialize, (_, s, _) => s.fresh.count() == 0L)
+    // The `fresh` flag is one left join inside the round, counted by the
+    // job that materializes the round, and materializing it with the
+    // state removes its 4x lazy re-run in the next round's plan
+    // (und(fresh) twice x the two non branches).
+    val res = fx.run(edges0, maxIters)((s, _) => refine(s),
+      _ => Seq(count(when(col("fresh"), 1))))((_, b, _) => b.probes.getLong(0) == 0L)
     if (!res.converged) throw new IllegalStateException(
       s"knnGraphConverged: no fixpoint after $maxIters NN-Descent rounds " +
         "— raise maxIters (and the oracle's unroll depth) rather than " +
         "accepting a truncated graph")
-    // fixpoint: `ranked` plans over the CHECKPOINTED edges, so the
-    // returned frame re-runs one refine body, not the whole history
-    (fx.back(res.state.ranked), res.rounds)
+    // fixpoint: the returned frame reads the last block's checkpoint
+    (fx.back(res.state.drop("fresh")), res.rounds)
   }
 
   /** Shared CTE chain of the k-NN graph oracles: quantized vectors,

@@ -1130,11 +1130,17 @@ class PipelineSpec extends SparkSuite {
     val before = settings()
     // read the caller's settings from inside every round and probe
     val seen = scala.collection.mutable.Buffer.empty[(String, String)]
-    val fx = new Fixpoint(spark, stateRows = 10)
-    val res = fx.frames(spark.range(4).toDF(), maxIters = 3)((s, _) => {
+    val (fx, in) = Fixpoint.over(spark.range(10).toDF())
+    assert(in.rows == 10L)
+    val res = fx.run(spark.range(4).toDF(), maxIters = 3)((s, _) => {
       seen += settings()
       s.select((col("id") + 1).as("id"))
-    }, (_, s, _) => { seen += settings(); s.count() < 0 })
+    }, _ => Seq(count(lit(1))))((_, b, _) => {
+      seen += settings()
+      // the probe is evaluated by the block's own job
+      assert(b.rows == 4L && b.probes.getLong(0) == 4L)
+      false
+    })
     assert(seen.size == 6 && seen.forall(_ == before),
       s"the caller's settings changed inside the loop: $seen (before $before)")
     assert(!res.converged && res.rounds == 3)
@@ -1161,6 +1167,66 @@ class PipelineSpec extends SparkSuite {
       s"a concurrent reader saw the loop settings: $during (before $before)")
     assert(ranks.sparkSession eq spark)
     assert(settings() == before)
+  }
+
+  /** `f`'s result and the Spark jobs it started: ids are handed out in
+    * submission order, so a marker job submitted before and after `f`
+    * brackets them (exact while `f` is the only job source). */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def marker(): Int = sc.submitJob(sc.parallelize(Seq(0), 1),
+      (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ()).jobIds.head
+    val first = marker()
+    val r = f
+    (r, marker() - first - 1)
+  }
+
+  test("fixpoint: one Spark job per round, the probe inside it") {
+    import graft.api.Dedup
+    // a path 0-1-...-7 plus two singletons: min-label propagation moves
+    // the label 0 one hop a round for 3 rounds, round 4's pointer jump
+    // finishes the path and round 5 changes nothing — 5 rounds
+    val pairs = (0L until 7L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val nodes = spark.range(10).select(col("id").as("doc_id"))
+    // the caller's AQE makes a job of every exchange of the input's
+    // query, and with AQE off (the loop setting) every broadcast join is
+    // a job of its own; with both off only the loop's own jobs are left
+    val off = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    val prev = off.map { case (k, _) => k -> spark.conf.get(k) }
+    off.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (cl, jobs) = try jobsDuring(Dedup.clusters(nodes, "doc_id", pairs))
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+    // one job materializes and counts the edges, then one per round
+    assert(jobs == 1 + 5, s"clusters built with $jobs jobs")
+    assert(cl.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ==
+      ((0L to 7L).map(i => (i, 0L, 8L)) ++ Seq((8L, 8L, 1L), (9L, 9L, 1L))).toSet)
+  }
+
+  test("fixpoint: a block plans each in-block round once; superseded blocks are released") {
+    import graft.api.Fixpoint
+    val sc = spark.sparkContext
+    // the round reads its state twice: a block chained as one lazy plan
+    // holds 2^blockSize copies of its seed
+    def loop(rounds: Int, blockSize: Int): (Seq[org.apache.spark.sql.DataFrame], Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val (fx, in) = Fixpoint.over(spark.range(8).toDF())
+      val planned = scala.collection.mutable.Buffer.empty[org.apache.spark.sql.DataFrame]
+      val res = fx.run(in.state, rounds, blockSize)((s, _) => {
+        planned += s.union(s).distinct()
+        planned.last
+      })((_, b, _) => { assert(b.rows == 8L); false })
+      assert(res.rounds == rounds)
+      assert(res.state.collect().map(_.getLong(0)).sorted.toSeq == (0L until 8L))
+      (planned.toSeq, (sc.getPersistentRDDs.keySet -- before).size)
+    }
+    val (planned, kept) = loop(rounds = 6, blockSize = 6)
+    val leaves = planned.map(_.queryExecution.analyzed.collectLeaves().size)
+    assert(leaves.sum <= 2 * 6, s"leaves planned per round: $leaves")
+    // what stays stored after a loop: its input and the state it returns,
+    // however many blocks ran
+    assert(kept == 2, s"$kept frames left stored")
+    assert(loop(rounds = 12, blockSize = 2)._2 == 2)
   }
 
   test("pagerank: integer fixed-point equals a local reference; partition-invariant") {
