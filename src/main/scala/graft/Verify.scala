@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * failed.json: each key whose query threw, with its message (`{}` when
+  * none did). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -11,13 +13,16 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val failed = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      .flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> Option(e.getMessage).getOrElse(e.toString))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -32,9 +37,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def obj(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), obj(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failed.json"), obj(failed))
     spark.stop()
   }
 }

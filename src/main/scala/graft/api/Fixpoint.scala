@@ -48,7 +48,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * to the clone, so it and everything derived from the materialized
   * state are planned and run under the loop settings; a frame a loop
   * returns is rebound with [[back]], so the caller's action runs under
-  * the caller's settings.
+  * the caller's settings. The clone shares compiled code with the caller:
+  * sessions built through [[graft.GraftSession]] run their tasks under
+  * one class loader, so a loop's rounds reuse every generated class the
+  * caller's session (or an earlier loop) already compiled.
   */
 private[graft] final class Fixpoint private (caller: SparkSession, session: SparkSession) {
 
