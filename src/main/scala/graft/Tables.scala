@@ -1,8 +1,11 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /** Centralized loaders for the driver-generated parquet tables
   * (TESTDATA.md / FIXTURES.md). All queries go through here so the
@@ -10,7 +13,8 @@ import org.apache.spark.sql.types.DecimalType
   * timestamp type varies by fixture generation) lives in exactly one
   * place.
   *
-  * Scale note: these are plain `spark.read.parquet` scans — at 100 TB the
+  * Scale note: these are plain `spark.read.parquet` scans (with the
+  * memoized footer schema, [[schema]]) — at 100 TB the
   * same call reads a partitioned directory tree and Catalyst handles
   * partition pruning / predicate pushdown; nothing here assumes a single
   * file.
@@ -18,8 +22,33 @@ import org.apache.spark.sql.types.DecimalType
 object Tables {
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
-  private def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(path(dir, name))
+  private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val p = path(dir, name)
+    spark.read.schema(schema(spark, p)).parquet(p)
+  }
+
+  /** Footer schemas by (path, modification time, length). */
+  private val footers = new ConcurrentHashMap[(String, Long, Long), StructType]()
+
+  /** The schema `spark.read.parquet(path)` infers, inferred once per JVM
+    * for each version of the path. Inference is a Spark job of its own
+    * (it reads the footers), so without this memo every read of a table
+    * pays one; the result is the exact inferred schema, so handing it to
+    * `spark.read.schema` changes no read. The key holds the path's
+    * modification time and length, so a file rewritten in place (another
+    * fixture generation's `ts`, FIXTURES.md "GOTCHA") is inferred again;
+    * a directory's own modification time moves when entries are added or
+    * removed. A missing path is not memoized: Spark reports it.
+    */
+  def schema(spark: SparkSession, path: String): StructType = {
+    def infer = spark.read.parquet(path).schema
+    val p = new Path(path)
+    try {
+      val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      footers.computeIfAbsent((st.getPath.toString, st.getModificationTime, st.getLen),
+        _ => infer)
+    } catch { case _: FileNotFoundException => infer }
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "nation")

@@ -36,7 +36,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   *    there is no cross-round plan for AQE to re-optimize.
   *  - `spark.sql.shuffle.partitions` is derived from the loop's input
   *    rows (`rows / RowsPerPartition`, clamped to [1, the session
-  *    value]), counted by the job that materializes the input
+  *    value]), counted while the input is materialized
   *    ([[Fixpoint.over]]): a 15k-edge loop runs 1-partition rounds, while
   *    a 100 TB edge table keeps the session's full parallelism. The
   *    session value is the cap, never raised.
@@ -100,10 +100,12 @@ private[graft] object Fixpoint {
   private val RowsPerPartition = 200000L
 
   /** A loop over `input`, on a clone of `input`'s session: the input is
-    * materialized once, under the caller's settings (it is the caller's
-    * query, not a loop round), and the job that materializes it also
-    * counts it; `weight` times its rows size the loop's shuffle
-    * parallelism. Returns the loop and the materialized input. */
+    * materialized once, in one SQL execution under the caller's settings
+    * (it is the caller's query, not a loop round), which also counts it;
+    * `weight` times its rows size the loop's shuffle parallelism. Under
+    * the caller's AQE that execution runs one Spark job per query stage,
+    * not one job (kcore's input ran as 7 in a traced `fixpoint_loops`
+    * round). Returns the loop and the materialized input. */
   def over(input: DataFrame, weight: Long = 1L): (Fixpoint, Block) = {
     val (in, rows, p) = Bridge.checkpointProbed(input, Nil)
     val session = Bridge.cloneSession(input.sparkSession)
@@ -115,7 +117,9 @@ private[graft] object Fixpoint {
   }
 
   /** A materialized frame: its rows counted and its probes evaluated by
-    * the one job that materialized it. */
+    * the SQL execution that materialized it — one job for a block (AQE
+    * is off in a loop), one job per query stage for an input [[over]]
+    * materializes under the caller's AQE. */
   final case class Block(state: DataFrame, rows: Long, probes: Row)
 
   /** How a loop ended: the last state (bound to the loop session once a

@@ -1,8 +1,11 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{KnownNullable, TimeWindow}
 import org.apache.spark.sql.expressions.{Window => W}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.Metadata
 
 /** Public event-time windowing API — the engine's core surface.
   *
@@ -26,14 +29,51 @@ object Windows {
       .agg(aggs.head, aggs.tail: _*), "window")
 
   /** Sliding windows (`size` / `slide`) — the "large window" shape: each
-    * row belongs to size/slide windows (Spark Expand does the
-    * multi-assignment; aggregation stays partial+final, no per-key state
-    * blow-up).
+    * row belongs to ceil(size/slide) windows, 36 for 6 h sliding by 10 min.
+    *
+    * One `Generate` assigns them: the row's last window start is Spark's
+    * own tumbling grid (`window(ts, slide).start`), and one
+    * `explode(sequence(...))` yields it and the ceil(size/slide) - 1
+    * starts before it, kept only while `start + size > ts` when size is
+    * not a multiple of slide (otherwise every start is open). The
+    * aggregate keys on the window END, a plain timestamp carrying the
+    * `ts` column's metadata, so a streaming append query closes a window
+    * and drops late partials on `end <= watermark`, exactly as Spark's
+    * `window(ts, size, slide)` struct key does; that rewrite instead
+    * `Expand`s one struct projection per overlap. Rows with a null `ts`
+    * belong to no window. Aggregation stays partial+final, with no
+    * per-key state blow-up.
     */
   def sliding(df: DataFrame, tsCol: String, size: String, slide: String,
-              keys: Seq[Column], aggs: Seq[Column]): DataFrame =
-    projectWindow(df.groupBy(window(col(tsCol), size, slide) +: keys: _*)
-      .agg(aggs.head, aggs.tail: _*), "window")
+              keys: Seq[Column], aggs: Seq[Column]): DataFrame = {
+    val sizeUs = TimeWindow.getIntervalInMicroSeconds(size)
+    val slideUs = TimeWindow.getIntervalInMicroSeconds(slide)
+    require(slideUs > 0 && slideUs <= sizeUs,
+      s"slide '$slide' must be positive and no longer than the window '$size'")
+    val span = expr(s"INTERVAL '$size'")
+    val assigned = df.withColumn("__ws",
+      windowStarts(window(col(tsCol), slide).getField("start"), slide,
+        (sizeUs + slideUs - 1) / slideUs))
+    val open = if (sizeUs % slideUs == 0) assigned
+      else assigned.filter(col("__ws") + span > col(tsCol))
+    val agged = open
+      .select(col("*"), (col("__ws") + span).as("__we", df.schema(tsCol).metadata))
+      .groupBy(col("__we") +: keys: _*)
+      .agg(aggs.head, aggs.tail: _*)
+    val rest = agged.columns.filter(_ != "__we").map(col)
+    agged.select(Seq(
+      nullable(col("__we") - span).as("window_start", Metadata.empty),
+      nullable(col("__we")).as("window_end", Metadata.empty)) ++ rest: _*)
+  }
+
+  /** The `n` slide-spaced window starts ending at `last`, one row each. */
+  private def windowStarts(last: Column, slide: String, n: Long): Column = {
+    val step = expr(s"INTERVAL '$slide'")
+    explode(sequence(last - step * (n - 1), last, step))
+  }
+
+  /** `c` typed nullable, like the fields of Spark's window struct. */
+  private def nullable(c: Column): Column = Bridge.toCol(KnownNullable(Bridge.toExpr(c)))
 
   /** Session windows with inactivity `gap`. An event extends the open
     * session iff ts < last_ts + gap (a gap of exactly `gap` starts a new
@@ -62,8 +102,8 @@ object Windows {
     * slicing): pre-aggregate into `slide`-sized tumbling panes, then roll
     * `slots` panes into each sliding window of size slots*slide.
     * Identical result to `sliding` for re-aggregable measures; at scale
-    * it Expands pane rows instead of raw rows — the classic large-window
-    * optimization.
+    * it assigns pane rows, not raw rows, to their `slots` windows — the
+    * classic large-window optimization.
     *
     * `paneAggs` must be re-aggregable partials (count/sum/min/max, exact
     * DECIMAL for float sums); `rollupAggs` merges them (same order),
@@ -80,8 +120,7 @@ object Windows {
     val keyNames = agged.columns.slice(1, 1 + keys.size).toSeq
     val panes = agged.withColumn("pane_start", col("window.start")).drop("window")
     val exploded = panes.withColumn("window_start",
-      explode(expr(s"sequence(pane_start - INTERVAL '$slide' * ${slots - 1}, " +
-        s"pane_start, INTERVAL '$slide')")))
+      windowStarts(col("pane_start"), slide, slots))
     exploded.groupBy(col("window_start") +: keyNames.map(col): _*)
       .agg(rollupAggs.head, rollupAggs.tail: _*)
       .withColumn("window_end", col("window_start") + expr(s"INTERVAL '$slide' * $slots"))

@@ -1750,28 +1750,18 @@ private[streaming] class ProfileProcessor
   */
 object StreamOps extends Serializable {
 
-  /** Resolved footer schemas by path — [[eventsStream]]'s schema probe is
-    * a BLOCKING batch read at stream-definition time (it lists the path
-    * and reads parquet footers); cached so each fixture dir pays it once
-    * per JVM. At scale, prefer passing an explicit schema (or read one
-    * file's footer) instead of footer-probing a large partitioned tree.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   /** `events` as an unbounded stream from the parquet path, ts normalized
     * exactly like Tables.events. A stream source needs an explicit schema;
-    * it is taken from the file's own footer (one metadata batch-read,
-    * cached per dir — see [[schemaCache]] for the cost note) so the source
-    * tracks whichever fixture generation is on disk (epoch-nanos long vs
+    * it is the file footer's, through [[graft.Tables.schema]] (inferred
+    * once per version of the file, the memo batch reads use), so the
+    * source tracks whichever fixture generation is on disk (epoch-nanos long vs
     * naive timestamp[us] — FIXTURES.md GOTCHA), then [[Tables.normalizeTs]]
     * canonicalizes exactly like the batch path.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val path = graft.Tables.path(dir, "events")
-    val fileSchema = schemaCache.computeIfAbsent(path, p => spark.read.parquet(p).schema)
     graft.Tables.normalizeTs(
-      spark.readStream.schema(fileSchema)
+      spark.readStream.schema(graft.Tables.schema(spark, path))
         .option("pathGlobFilter", "events.parquet") // the source wants a directory
         .parquet(dir))
   }

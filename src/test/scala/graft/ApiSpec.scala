@@ -47,6 +47,49 @@ class ApiSpec extends SparkSuite {
     assert(got.toSet == Set(usTs), s"all three forms must yield $usTs; got $got")
   }
 
+  /** `df` as the single parquet file `dir/events.parquet`, replacing any
+    * file there, the way a fixture generation lands on disk. */
+  private def writeEventsFile(df: org.apache.spark.sql.DataFrame, dir: String): Unit = {
+    val out = Files.createTempDirectory("events_out").resolve("o")
+    df.coalesce(1).write.parquet(out.toString)
+    val part = Files.list(out).filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.move(part, java.nio.file.Paths.get(Tables.path(dir, "events")),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  test("Tables infers a table's footer schema once: a second read runs no Spark job") {
+    val dir = Files.createTempDirectory("footer_once").toString
+    Files.copy(java.nio.file.Paths.get(Tables.path(sf001, "events")),
+      java.nio.file.Paths.get(Tables.path(dir, "events")))
+    val (first, inferJobs) = jobsDuring(Tables.events(spark, dir))
+    val (second, jobs) = jobsDuring(Tables.events(spark, dir))
+    assert(inferJobs >= 1, "a fresh file's schema is inferred by a job")
+    assert(jobs == 0, s"the second read of an unchanged file ran $jobs jobs")
+    assert(second.schema == first.schema)
+    assert(second.count() == Tables.events(spark, sf001).count())
+  }
+
+  test("Tables re-infers a file rewritten in place with the other ts generation") {
+    val dir = Files.createTempDirectory("footer_rewrite").toString
+    val at = java.time.LocalDateTime.parse("2024-01-05T10:30:00.123456")
+    val want = java.sql.Timestamp.valueOf(at)
+    val micros = want.getTime / 1000 * 1000000 + want.getNanos / 1000
+    // naive TIMESTAMP_NTZ (the r7 timestamp[us] generation)
+    writeEventsFile(Seq((1L, at, 7L, "click", 1.5))
+      .toDF("event_id", "ts", "user_id", "event_type", "value"), dir)
+    val ntz = Tables.events(spark, dir).select("ts").as[java.sql.Timestamp].collect()
+    // epoch-nanos long (the legacy nanosAsLong generation), same path
+    writeEventsFile(Seq((1L, micros * 1000L, 7L, "click", 1.5))
+      .toDF("event_id", "ts", "user_id", "event_type", "value"), dir)
+    assert(spark.read.parquet(Tables.path(dir, "events")).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val nanos = Tables.events(spark, dir)
+    assert(nanos.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    val again = nanos.select("ts").as[java.sql.Timestamp].collect()
+    assert(ntz.toSeq == Seq(want) && again.toSeq == Seq(want),
+      s"both generations must read as $want; got ${ntz.toSeq} then ${again.toSeq}")
+  }
+
   test("bandedRangeJoin returns exactly the naive theta-join rows, without a nested loop") {
     val li = Tables.lineitem(spark, sf001).filter(col("l_orderkey") <= 200)
       .select(col("l_orderkey"), col("l_linenumber"),

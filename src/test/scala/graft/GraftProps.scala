@@ -53,6 +53,39 @@ object GraftProps extends Properties("graft") {
       total == rows.size.toLong * 4
     }
 
+  /** (user, ts-offset-seconds or null, cents) rows over a ~2 day span,
+    * a third of the offsets on the 5 min grid so rows land on window
+    * boundaries. */
+  private val nullableTsEventsGen: Gen[List[(Long, Option[Long], Long)]] =
+    Gen.nonEmptyListOf(for {
+      user <- Gen.choose(1L, 3L)
+      offs <- Gen.frequency(
+        1 -> Gen.const(None),
+        6 -> Gen.choose(0L, 2L * 86400).map(Some(_)),
+        3 -> Gen.choose(0L, 2L * 288).map(i => Some(i * 300)))
+      cents <- Gen.choose(0L, 99999L)
+    } yield (user, offs, cents))
+
+  property("sliding windows equal Spark's window(ts, size, slide) grouping, null ts included") =
+    forAll(nullableTsEventsGen) { rows =>
+      val sp = spark
+      import sp.implicits._
+      val df = rows.map { case (u, o, c) =>
+        (u, o.map(s => new Timestamp(base + s * 1000)), c / 100.0)
+      }.toDF("user_id", "ts", "value")
+      val aggs = Seq(count(lit(1)).as("n_events"),
+        sum(graft.Det.dec2(col("value"))).cast("double").as("sum_value"))
+      // 25 min does not divide 1 h (the filtered case); 10 min divides 6 h
+      Seq("1 hour" -> "25 minutes", "6 hours" -> "10 minutes").forall { case (size, slide) =>
+        val got = Windows.sliding(df, "ts", size, slide, Seq(col("user_id")), aggs)
+        val native = df.groupBy(window(col("ts"), size, slide), col("user_id"))
+          .agg(aggs.head, aggs.tail: _*)
+          .select(col("window.start").as("window_start"), col("window.end").as("window_end"),
+            col("user_id"), col("n_events"), col("sum_value"))
+        got.schema == native.schema && got.collect().toSet == native.collect().toSet
+      }
+    }.useSeed(org.scalacheck.rng.Seed(6L))
+
   property("FIRE_AND_PURGE panes lie on the 15 min grid and partition each window exactly") =
     forAll(eventsGen) { rows =>
       val sp = spark

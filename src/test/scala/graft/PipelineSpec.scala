@@ -1169,18 +1169,6 @@ class PipelineSpec extends SparkSuite {
     assert(settings() == before)
   }
 
-  /** `f`'s result and the Spark jobs it started: ids are handed out in
-    * submission order, so a marker job submitted before and after `f`
-    * brackets them (exact while `f` is the only job source). */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    def marker(): Int = sc.submitJob(sc.parallelize(Seq(0), 1),
-      (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ()).jobIds.head
-    val first = marker()
-    val r = f
-    (r, marker() - first - 1)
-  }
-
   test("fixpoint: one Spark job per round, the probe inside it") {
     import graft.api.Dedup
     // a path 0-1-...-7 plus two singletons: min-label propagation moves

@@ -38,6 +38,14 @@ class PlanSpec extends SparkSuite {
     assert(plan("sort_limit").contains("TakeOrderedAndProject"))
   }
 
+  test("wnd_sliding assigns windows with one Generate, no Expand") {
+    import org.apache.spark.sql.execution.{ExpandExec, GenerateExec}
+    val p = SparkEntry.queries("wnd_sliding")(spark, sf001).queryExecution.sparkPlan
+    assert(p.collect { case e: ExpandExec => e }.isEmpty,
+      s"a sliding window rewrite Expands every row once per overlap:\n$p")
+    assert(p.collect { case g: GenerateExec => g }.size == 1, s"one Generate expected:\n$p")
+  }
+
   test("stream_lookup_join broadcasts the dim; the fact side never shuffles") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     val p = SparkEntry.queries("stream_lookup_join")(spark, sf001)

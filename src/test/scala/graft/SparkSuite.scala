@@ -21,4 +21,16 @@ trait SparkSuite extends AnyFunSuite {
   }
 
   val sf001 = "/root/testdata/sf0.001"
+
+  /** `f`'s result and the Spark jobs it started: ids are handed out in
+    * submission order, so a marker job submitted before and after `f`
+    * brackets them (exact while `f` is the only job source). */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    def marker(): Int = sc.submitJob(sc.parallelize(Seq(0), 1),
+      (_: Iterator[Int]) => (), Seq(0), (_: Int, _: Unit) => (), ()).jobIds.head
+    val first = marker()
+    val r = f
+    (r, marker() - first - 1)
+  }
 }
