@@ -269,7 +269,7 @@ case class CepCondStep(name: String, predicateSql: String, minRep: Int = 1,
   * property gate checks. Conditions that need the rows already matched
   * in the attempt (Flink `IterativeCondition`) are NOT expressible as a
   * derived column — use [[Cep.matchSequenceIter]] /
-  * StreamOps.cepPatternIter for those.
+  * StreamOps.cepPatternIterStream for those.
   */
 case class CepCondPattern(steps: Seq[CepCondStep], withinMinutes: Option[Int] = None,
                           skip: CepSkip = SkipPastLastRow, strict: Boolean = true,
@@ -381,8 +381,8 @@ object Cep {
     * has already consumed in this attempt. Row-wise evaluation — no
     * symbol derivation, so overlapping predicates and match-relative
     * conditions ("value > first matched value") are both expressible.
-    * The distributed form is StreamOps.cepPatternIter (per-key
-    * flatMapGroups); [[compile]] cannot plan iterative conditions (the
+    * The distributed form is StreamOps.cepPatternIterStream (per-key,
+    * streaming or batch replay); [[compile]] cannot plan iterative conditions (the
     * run table is condition-independent) and [[compileWhere]] covers
     * only context-free, mutually-exclusive predicates.
     */
@@ -405,9 +405,9 @@ object Cep {
     * counts). Semantics are [[matchSequence]]'s — same anchors, same
     * greedy resolution, same skip/WITHIN — with the consumption context
     * the matcher already threads snapshotted at emission instead of
-    * discarded. The distributed form is a per-key flatMapGroups (e.g.
-    * graft.queries.Analytic's event_cep_measures), the same placement
-    * as every other per-key CEP path here.
+    * discarded. The distributed form is a per-key flatMapGroups
+    * (StreamOps.cepAllRowsPattern), the same placement as every other
+    * per-key CEP path here.
     */
   def matchSequenceMeasures[E](events: IndexedSeq[E], tsUs: E => Long, sym: E => String,
                                pattern: CepPattern): Seq[(CepSeqMatch, IndexedSeq[IndexedSeq[E]])] =
@@ -848,8 +848,8 @@ object Cep {
     *    each anchor reads its precomputed suffix-cumulative sum.
     *
     * Relaxed patterns use [[matchSequenceMeasures]] /
-    * StreamOps.cepMeasures instead (the same split as relaxed + PAST
-    * LAST ROW, which compile also declines). Property-tested against
+    * StreamOps.cepAllRowsPattern instead (the same split as relaxed +
+    * PAST LAST ROW, which compile also declines). Property-tested against
     * the sequential reference on random strict patterns (CepSpec); the
     * DuckDB replay comes from [[oracleSqlMeasures]].
     */
@@ -857,8 +857,8 @@ object Cep {
                       symCol: String, valCol: String, pattern: CepPattern): DataFrame = {
     require(pattern.strict,
       "compiled MEASURES cover strict contiguity (run-aligned value " +
-        "aggregation); use Cep.matchSequenceMeasures / StreamOps.cepMeasures " +
-        "for relaxed patterns")
+        "aggregation); use Cep.matchSequenceMeasures / " +
+        "StreamOps.cepAllRowsPattern for relaxed patterns")
     compileImpl(df, keyCol, tsCol, ordCol, symCol, Some(valCol), pattern)
   }
 

@@ -245,8 +245,8 @@ object Analytic {
     // WITHIN 10 min matches as event_cep, each projecting per-step row
     // aggregates — click-run count/first/last plus exact-cents
     // sum/avg/max of the run's values and the purchase row's value —
-    // from the sequential matcher's consumption context
-    // (Cep.matchSequenceMeasures; the strict WITHIN anchor-advance
+    // sliced off each strict match's consumed block by the batch replay
+    // of StreamOps.cepMeasuresStream (the strict WITHIN anchor-advance
     // consumes exactly the run's qualifying suffix, so the oracle is
     // the event_cep islands rewrite extended with the aggregates).
     "event_cep_measures" -> ((s, d) => {
@@ -255,7 +255,7 @@ object Analytic {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .as[Ev]
-      StreamOps.cepMeasures(ev, withinMinutes = 10)
+      StreamOps.cepMeasuresStream(ev, withinMinutes = 10, streaming = false)
         .toDF()
         .orderBy("user_id", "purchase_id")
     }),
@@ -264,15 +264,18 @@ object Analytic {
     // beyond Flink CEP): every consumed row of every C+ P match,
     // tagged with match identity (ending purchase), step symbol, and
     // consumption position — the row-level companion of
-    // event_cep_measures, same matches, same per-key placement.
+    // event_cep_measures, same matches, run by the batch replay of
+    // StreamOps.cepPatternAllRows with the old column names restored.
     "event_cep_all_rows" -> ((s, d) => {
       val sp = s
       import sp.implicits._
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .as[Ev]
-      StreamOps.cepAllRows(ev, withinMinutes = 10)
-        .toDF()
+      StreamOps.cepPatternAllRows(ev, StreamOps.clickRun(10),
+          Seq("click", "purchase"), streaming = false)
+        .select(col("user_id"), col("end_id").as("purchase_id"), col("pos"),
+          col("event_id"), col("ts"), col("step"), col("value"))
         .orderBy("user_id", "purchase_id", "pos")
     }),
 
@@ -446,7 +449,8 @@ object Analytic {
     // followed by the FIRST later purchase whose value EXCEEDS THE
     // ANCHOR'S — the predicate reads the rows already matched in the
     // attempt, which no derived symbol column can express. Runs as the
-    // per-key distributed sequential matcher (StreamOps.cepPatternIter);
+    // per-key distributed sequential matcher (the batch replay of
+    // StreamOps.cepPatternIterStream);
     // the oracle is the independent SQL formulation of the same
     // semantics (first qualifying successor via row_number, WITHIN as a
     // post-filter), and CepSpec pins the matcher against a brute-force
@@ -457,7 +461,8 @@ object Analytic {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
         .as[Ev]
-      StreamOps.cepPatternIter(ev, CepPatterns.iter, CepPatterns.iterConds)
+      StreamOps.cepPatternIterStream(ev, CepPatterns.iter, CepPatterns.iterConds,
+          streaming = false)
         .toDF()
         .orderBy("user_id", "start_id")
     }),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
   OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
@@ -37,25 +37,20 @@ case class CepMatch(user_id: Long, purchase_id: Long, purchase_ts: java.sql.Time
 /** CEP keyed state: epoch-micros of the clicks in the current run. */
 private[streaming] case class CepState(run: Seq[Long])
 
-/** One `C+ P` match with MEASURES (StreamOps.cepMeasures): the per-step
-  * row aggregates MATCH_RECOGNIZE projects — click-run count/span plus
-  * sum/avg/max of the run's values and the purchase row's own value. */
 /** A probe vector arriving on a stream (the ANN-serving input shape). */
 case class EmbRow(vec_id: Long, embedding: Seq[Float])
 
 /** One served ANN result row ([[StreamOps.lshServe]]). */
 case class AnnHit(probe_id: Long, rnk: Int, neighbor_id: Long, cos: Double)
 
+/** One `C+ P` match with MEASURES (StreamOps.cepMeasuresStream): the
+  * per-step row aggregates MATCH_RECOGNIZE projects — click-run
+  * count/span plus sum/avg/max of the run's values and the purchase
+  * row's own value. */
 case class CepMeasured(user_id: Long, purchase_id: Long, purchase_ts: java.sql.Timestamp,
                        n_clicks: Long, first_click_ts: java.sql.Timestamp,
                        last_click_ts: java.sql.Timestamp, sum_click: Double,
                        avg_click: Double, max_click: Double, purchase_value: Double)
-
-/** One consumed row of the ALL ROWS PER MATCH projection
-  * (StreamOps.cepAllRows): the row itself plus its match identity
-  * (the ending purchase), step symbol, and consumption position. */
-case class CepMatchRow(user_id: Long, purchase_id: Long, pos: Long, event_id: Long,
-                       ts: java.sql.Timestamp, step: String, value: Double)
 
 /** One general-pattern CEP match (StreamOps.cepPattern / api.Cep.compile —
   * same schema as the compiled batch form). */
@@ -63,10 +58,9 @@ case class CepPatMatch(user_id: Long, start_id: Long, start_ts: java.sql.Timesta
                        end_id: Long, end_ts: java.sql.Timestamp,
                        n_rows: Long, step_counts: String)
 
-/** One consumed row of the GENERAL ALL ROWS PER MATCH projection
-  * (StreamOps.cepAllRowsPattern — any symbolic pattern, vs
-  * [[CepMatchRow]]'s fixed C+ P shape): match identity is the match's
-  * start/end consumed rows (start_id is unique per match under every
+/** One consumed row of the ALL ROWS PER MATCH projection
+  * (StreamOps.cepPatternAllRows / cepAllRowsPattern — any symbolic
+  * pattern): match identity is the match's start/end consumed rows (start_id is unique per match under every
   * skip strategy — anchors strictly advance), `step` is the consuming
   * step's symbol, `pos` the 1-based consumption position. */
 case class CepAllRow(user_id: Long, start_id: Long, end_id: Long, pos: Long,
@@ -89,8 +83,34 @@ case class MinhashIncrCand(doc_id: Long, first_id: Long, n_agree: Long)
   * representative; state is bounded by distinct buckets, not events). */
 private[streaming] case class BucketFirst(first_id: Long, sig: Seq[Long])
 
-/** General-CEP keyed state: the unconsumed (sym, tsUs, ord) buffer tail. */
-private[streaming] case class CepPatState(syms: Seq[String], ts: Seq[Long], ords: Seq[Long])
+/** The keyed CEP buffer of every stateful matcher in [[StreamOps]]
+  * (its fold, `cepFold`, and the two transformWithState processors):
+  * the unconsumed rows from the first pending anchor on, as parallel
+  * columns (symbol, epoch-micros ts, event_id, value), plus the
+  * per-key count of the matches sealed so far (`matchSeq`, the base of
+  * MATCH_NUMBER; 0 for a matcher that does not number its matches).
+  *
+  * DELIBERATE UNBOUNDED-COUNTER STANCE (round-12 ADVICE note): once a
+  * key has sealed a numbered match, a counter-only entry (empty buffer
+  * seqs + one long, ~tens of bytes) stays in the store forever under
+  * NoTimeout — dropping it would silently RESTART MATCH_NUMBER for
+  * that key, which is a correctness bug. State is removed only when the
+  * buffer is empty and no counter was ever set. State growth of a
+  * numbering matcher is therefore bounded by KEY CARDINALITY, not event
+  * volume — the same property as any keyed aggregation; a deployment
+  * that must bound key cardinality can layer store-level TTL and accept
+  * per-key renumbering after expiry. */
+private[streaming] case class CepBuf(syms: Seq[String], ts: Seq[Long], ords: Seq[Long],
+                                     vals: Seq[Double], matchSeq: Long) {
+  def events(user: Long): IndexedSeq[Ev] =
+    syms.indices.map(i => Ev(ords(i), StreamOps.microsTs(ts(i)), user, syms(i), vals(i)))
+}
+
+private[streaming] object CepBuf {
+  def of(evs: Seq[Ev], matchSeq: Long): CepBuf =
+    CepBuf(evs.map(_.event_type), evs.map(e => StreamOps.tsMicros(e.ts)),
+      evs.map(_.event_id), evs.map(_.value), matchSeq)
+}
 
 /** One TIMED-OUT partial match (StreamOps.cepTimeout / api.Cep
   * .compileNotEnd with a deadline column — Flink's CEP timeout side
@@ -113,25 +133,6 @@ private[streaming] case class PendingTimeout(startTsUs: Long, endTsUs: Long,
                                              stepCounts: String,
                                              deadlineUs: Long)
 
-/** General-CEP keyed state for the MEASURES matcher: the buffer tail
-  * WITH row values (the aggregates read them at seal time) plus the
-  * per-key sealed-match counter (MATCH_NUMBER must keep counting
-  * across batches).
-  *
-  * DELIBERATE UNBOUNDED-COUNTER STANCE (round-12 ADVICE note): once a
-  * key has sealed a match, a counter-only entry (empty buffer seqs +
-  * one long, ~tens of bytes) stays in the store forever under
-  * NoTimeout — dropping it would silently RESTART MATCH_NUMBER for
-  * that key, which is a correctness bug, so the sibling
-  * cepPatternAllRows (which carries no counter) drops empty-buffer
-  * state and this matcher does not. State growth is therefore bounded
-  * by KEY CARDINALITY, not event volume — the same property as any
-  * keyed aggregation; a deployment that must bound key cardinality can
-  * layer store-level TTL and accept per-key renumbering after expiry. */
-private[streaming] case class CepPatMState(syms: Seq[String], ts: Seq[Long],
-                                           ords: Seq[Long], vals: Seq[Double],
-                                           matchSeq: Long)
-
 /** One sealed match with its general MEASURES evaluated AT EMISSION
   * (StreamOps.cepPatternMeasures): the match meta plus the measure
   * values in three typed maps keyed by alias — COUNT/MATCH_NUMBER in
@@ -143,12 +144,6 @@ case class CepMeasuredSql(user_id: Long, start_id: Long,
                           end_ts: java.sql.Timestamp, n_rows: Long,
                           longs: Map[String, Long], nums: Map[String, Double],
                           strs: Map[String, String])
-
-/** CEP buffer state carrying row VALUES too — the MEASURES streaming
-  * matcher must re-derive per-step aggregates from retained rows
-  * (StreamOps.cepMeasuresStream). */
-private[streaming] case class CepValState(syms: Seq[String], ts: Seq[Long],
-                                          ids: Seq[Long], vals: Seq[Double])
 
 private[streaming] case class UserAgg(n_events: Long, sum_cents: Long, max_ts_ms: Long)
 
@@ -953,34 +948,30 @@ case class CumulateRow(period_start: java.sql.Timestamp,
   * the pending-anchor window span of rows. */
 private[streaming] class CepAnyProcessor(pattern: CepPattern)
     extends StatefulProcessor[Long, Ev, CepPatMatch] {
-  @transient private var buf: ValueState[CepPatState] = _
+  @transient private var buf: ValueState[CepBuf] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    buf = getHandle.getValueState[CepPatState]("anybuf",
-      Encoders.product[CepPatState], TTLConfig.NONE)
+    buf = getHandle.getValueState[CepBuf]("anybuf",
+      Encoders.product[CepBuf], TTLConfig.NONE)
 
-  private def load(): IndexedSeq[CepEvent] =
-    (if (buf.exists()) Some(buf.get()) else None)
-      .map(s => s.syms.indices.map(i => CepEvent(s.syms(i), s.ts(i), s.ords(i))))
-      .getOrElse(IndexedSeq.empty)
+  private def load(key: Long): IndexedSeq[Ev] =
+    if (buf.exists()) buf.get().events(key) else IndexedSeq.empty
 
-  private def store(evs: IndexedSeq[CepEvent]): Unit =
-    if (evs.isEmpty) buf.clear()
-    else buf.update(CepPatState(evs.map(_.sym), evs.map(_.tsUs), evs.map(_.ord)))
+  private def store(evs: IndexedSeq[Ev]): Unit =
+    if (evs.isEmpty) buf.clear() else buf.update(CepBuf.of(evs, 0L))
 
   override def handleInputRows(key: Long, rows: Iterator[Ev],
                                timers: TimerValues): Iterator[CepPatMatch] = {
     val wUs = pattern.withinUs.getOrElse(throw new IllegalArgumentException(
       "streaming followedByAny needs WITHIN — an open window never " +
         "finishes enumerating an anchor's alternatives"))
-    val fresh = rows.map(e =>
-      CepEvent(e.event_type, StreamOps.tsMicros(e.ts), e.event_id)).toIndexedSeq
+    val fresh = rows.toIndexedSeq
     val head = pattern.steps.head.symbol
     // ceil to ms: the expiry must reach the exact micros deadline,
     // else the fired timer's own anchor fails its <= expiry filter
-    fresh.filter(_.sym == head).foreach(a =>
-      getHandle.registerTimer((a.tsUs + wUs + 999L) / 1000L))
-    store((load() ++ fresh).sortBy(e => (e.tsUs, e.ord)))
+    fresh.filter(_.event_type == head).foreach(a =>
+      getHandle.registerTimer((StreamOps.tsMicros(a.ts) + wUs + 999L) / 1000L))
+    store(StreamOps.cepSorted(load(key) ++ fresh))
     Iterator.empty
   }
 
@@ -989,20 +980,18 @@ private[streaming] class CepAnyProcessor(pattern: CepPattern)
     val wUs = pattern.withinUs.get
     val eUs = expired.getExpiryTimeInMs() * 1000L
     val wmUs = math.max(timers.getCurrentWatermarkInMs() * 1000L, eUs)
-    val evs = load()
+    val rows = load(key)
+    val evs = StreamOps.cepEvents(rows)
     val head = pattern.steps.head.symbol
     val out = Cep.matchSequence(evs, pattern)
       .filter(m => evs(m.startIdx).tsUs + wUs <= eUs)
-      .map(m => CepPatMatch(key, evs(m.startIdx).ord,
-        StreamOps.microsTs(evs(m.startIdx).tsUs), evs(m.endIdx).ord,
-        StreamOps.microsTs(evs(m.endIdx).tsUs), m.nRows.toLong,
-        m.stepCounts.mkString(",")))
+      .map(StreamOps.patMatch(key, rows, _))
     val pendingAnchor = evs.indexWhere(r => r.sym == head && r.tsUs + wUs > eUs)
     val keepFrom = evs.indexWhere(r => r.tsUs >= wmUs) match {
       case -1 => pendingAnchor
       case i => if (pendingAnchor < 0) i else math.min(i, pendingAnchor)
     }
-    store(if (keepFrom < 0) IndexedSeq.empty else evs.drop(keepFrom))
+    store(if (keepFrom < 0) IndexedSeq.empty else rows.drop(keepFrom))
     out.iterator
   }
 }
@@ -1222,12 +1211,12 @@ private[streaming] class CumulateProcessor(periodSec: Long = 21600L,
 private[streaming] class CepTimeoutProcessor(pattern: CepPattern,
                                              negSymbol: String)
     extends StatefulProcessor[Long, Ev, CepTimeoutMatch] {
-  @transient private var buf: ValueState[CepPatState] = _
+  @transient private var buf: ValueState[CepBuf] = _
   @transient private var pending: org.apache.spark.sql.streaming.MapState[Long, PendingTimeout] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    buf = getHandle.getValueState[CepPatState]("ctbuf",
-      Encoders.product[CepPatState], TTLConfig.NONE)
+    buf = getHandle.getValueState[CepBuf]("ctbuf",
+      Encoders.product[CepBuf], TTLConfig.NONE)
     pending = getHandle.getMapState[Long, PendingTimeout]("ctpend",
       Encoders.scalaLong, Encoders.product[PendingTimeout], TTLConfig.NONE)
   }
@@ -1244,12 +1233,11 @@ private[streaming] class CepTimeoutProcessor(pattern: CepPattern,
                                timers: TimerValues): Iterator[CepTimeoutMatch] = {
     val wUs = pattern.withinUs.getOrElse(throw new IllegalArgumentException(
       "cepTimeout needs WITHIN — an un-windowed timeout never fires"))
-    val fresh = rows.map(e =>
-      CepEvent(e.event_type, StreamOps.tsMicros(e.ts), e.event_id)).toIndexedSeq
-    val buf0 = (if (buf.exists()) Some(buf.get()) else None)
-      .map(s => s.syms.indices.map(i => CepEvent(s.syms(i), s.ts(i), s.ords(i))))
-      .getOrElse(Seq.empty)
-    val evs = (buf0 ++ fresh).sortBy(e => (e.tsUs, e.ord)).toIndexedSeq
+    val freshRows = rows.toIndexedSeq
+    val fresh = StreamOps.cepEvents(freshRows)
+    val all = StreamOps.cepSorted(
+      (if (buf.exists()) buf.get().events(key) else IndexedSeq.empty) ++ freshRows)
+    val evs = StreamOps.cepEvents(all)
     // fresh forbidden rows first: they can cancel candidates pending
     // from EARLIER batches (new candidates check the full buffer below)
     fresh.filter(_.sym == negSymbol).foreach { r =>
@@ -1276,9 +1264,8 @@ private[streaming] class CepTimeoutProcessor(pattern: CepPattern,
         }
       }
     }
-    val keep = evs.drop(resume)
-    if (keep.isEmpty) buf.clear()
-    else buf.update(CepPatState(keep.map(_.sym), keep.map(_.tsUs), keep.map(_.ord)))
+    val keep = all.drop(resume)
+    if (keep.isEmpty) buf.clear() else buf.update(CepBuf.of(keep, 0L))
     out.iterator
   }
 
@@ -2621,6 +2608,21 @@ object StreamOps extends Serializable {
     t
   }
 
+  /** A key's rows in the CEP matchers' total order, (ts, event_id). */
+  private[streaming] def cepSorted(evs: IndexedSeq[Ev]): IndexedSeq[Ev] =
+    evs.sortBy(e => (tsMicros(e.ts), e.event_id))
+
+  /** Rows as the symbolic matchers' input, index for index. */
+  private[streaming] def cepEvents(evs: IndexedSeq[Ev]): IndexedSeq[CepEvent] =
+    evs.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
+
+  /** A match over `evs` as its summary row. */
+  private[streaming] def patMatch(user: Long, evs: IndexedSeq[Ev],
+                                  m: CepSeqMatch): CepPatMatch =
+    CepPatMatch(user, evs(m.startIdx).event_id, evs(m.startIdx).ts,
+      evs(m.endIdx).event_id, evs(m.endIdx).ts, m.nRows.toLong,
+      m.stepCounts.mkString(","))
+
   /** Streaming CEP `C+ P WITHIN n` (Flink CEP's flagship pattern, the
     * stateful sibling of api.Cep.runThenFinal): per user, a maximal run
     * of consecutive clicks ended by a purchase emits one match counting
@@ -2882,9 +2884,48 @@ object StreamOps extends Serializable {
     (out.toSeq, if (resume >= 0) resume else n)
   }
 
+  /** The keyed CEP fold every flatMapGroupsWithState matcher below runs
+    * on. Per user and invocation: decode the buffered tail ([[CepBuf]]),
+    * merge the new rows in, sort by (ts, event_id), let `seal` pick the
+    * matches no future row can change plus the buffer index to resume
+    * from, keep the rows from that index, and turn each match into
+    * output rows with `emit` (its third argument is the match's 1-based
+    * number among the key's matches). Anchors before the resume index
+    * are resolved (emitted or failed) and leave the state, so no match
+    * emits twice and the output does not depend on where micro-batches
+    * split — StreamingSpec's random-split table pins that for every
+    * operator on this fold.
+    *
+    * `numbered` keeps the per-key match counter in state (MATCH_NUMBER;
+    * see [[CepBuf]] for why it is never dropped). Batch replay
+    * (streaming = false): one invocation per key sees all its rows and
+    * runs `replay`, the reference matcher, and retains nothing.
+    */
+  private def cepFold[O: Encoder](ev: Dataset[Ev], streaming: Boolean,
+      numbered: Boolean = false)(
+      replay: IndexedSeq[Ev] => Seq[CepSeqMatch],
+      seal: IndexedSeq[Ev] => (Seq[CepSeqMatch], Int))(
+      emit: (Long, IndexedSeq[Ev], CepSeqMatch, Long) => Iterator[O]): Dataset[O] = {
+    import ev.sparkSession.implicits._
+    ev.groupByKey(_.user_id)
+      .flatMapGroupsWithState[CepBuf, O](OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (user: Long, events: Iterator[Ev], state: GroupState[CepBuf]) =>
+          val prior = state.getOption
+          val evs = cepSorted(prior.fold(IndexedSeq.empty[Ev])(_.events(user)) ++ events)
+          val seq0 = prior.fold(0L)(_.matchSeq)
+          val (matches, resume) = if (streaming) seal(evs) else (replay(evs), evs.size)
+          val keep = evs.drop(resume)
+          val seq = if (numbered) seq0 + matches.size else 0L
+          if (!streaming || (keep.isEmpty && seq == 0L)) state.remove()
+          else state.update(CepBuf.of(keep, seq))
+          matches.iterator.zipWithIndex.flatMap { case (m, i) =>
+            emit(user, evs, m, seq0 + i + 1) }
+      }
+  }
+
   /** General CEP pattern matching — the stateful sibling of
     * api.Cep.compile, running api.Cep.matchSequence's semantics
-    * incrementally under flatMapGroupsWithState.
+    * incrementally on [[cepFold]].
     *
     * Streaming mode emits a match only once SEALED (see [[sealedScan]]);
     * the unconsumed tail from the first pending anchor stays in state,
@@ -2904,31 +2945,10 @@ object StreamOps extends Serializable {
   def cepPattern(ev: Dataset[Ev], pattern: CepPattern,
                  streaming: Boolean): Dataset[CepPatMatch] = {
     import ev.sparkSession.implicits._
-    def mk(user: Long, evs: IndexedSeq[CepEvent], m: CepSeqMatch): CepPatMatch =
-      CepPatMatch(user, evs(m.startIdx).ord, microsTs(evs(m.startIdx).tsUs),
-        evs(m.endIdx).ord, microsTs(evs(m.endIdx).tsUs),
-        m.nRows.toLong, m.stepCounts.mkString(","))
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepPatState, CepPatMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[Ev], state: GroupState[CepPatState]) =>
-          val fresh = events.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          val buf0 = state.getOption.map(s =>
-            s.syms.indices.map(i => CepEvent(s.syms(i), s.ts(i), s.ords(i))))
-            .getOrElse(Seq.empty)
-          val evs = (buf0 ++ fresh).sortBy(e => (e.tsUs, e.ord)).toIndexedSeq
-          if (!streaming) {
-            state.remove()
-            Cep.matchSequence(evs, pattern).iterator.map(mk(user, evs, _))
-          } else {
-            val (matches, resume) = sealedScan(evs, pattern)
-            val keep = evs.drop(resume)
-            if (keep.isEmpty) state.remove()
-            else state.update(CepPatState(keep.map(_.sym), keep.map(_.tsUs),
-              keep.map(_.ord)))
-            matches.iterator.map(mk(user, evs, _))
-          }
-      }
+    cepFold(ev, streaming)(
+      evs => Cep.matchSequence(cepEvents(evs), pattern),
+      evs => sealedScan(cepEvents(evs), pattern)
+    )((user, evs, m, _) => Iterator.single(patMatch(user, evs, m)))
   }
 
   /** CEP timeout side output under readStream (see
@@ -2951,8 +2971,7 @@ object StreamOps extends Serializable {
           TimeMode.EventTime(), OutputMode.Append())
     else
       ev.groupByKey(_.user_id).flatMapGroups { (user: Long, it: Iterator[Ev]) =>
-        val evs = it.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          .toIndexedSeq.sortBy(e => (e.tsUs, e.ord))
+        val evs = cepEvents(cepSorted(it.toIndexedSeq))
         Cep.matchSequence(evs, pattern).iterator.flatMap { m =>
           val (start, end) = (evs(m.startIdx), evs(m.endIdx))
           val deadlineUs = start.tsUs + wUs
@@ -2982,8 +3001,8 @@ object StreamOps extends Serializable {
     * Scan cost: each anchor probe re-runs the per-branch seal scan on
     * the buffered suffix — O(buffer² · branches) worst case, bounded
     * in practice because state holds only rows from the FIRST
-    * undecided anchor (exactly like [[cepPattern]]) and each branch's
-    * WITHIN prunes dead pending anchors inside [[sealedScan]], so an
+    * undecided anchor ([[cepFold]], as for [[cepPattern]]) and each
+    * branch's WITHIN prunes dead pending anchors inside [[sealedScan]], so an
     * in-order stream never wedges on a never-completing branch.
     *
     * Batch replay (streaming = false): per-branch reference matcher
@@ -2998,70 +3017,51 @@ object StreamOps extends Serializable {
       "streaming alternation is SKIP TO NEXT ROW only — per-anchor " +
         "independent emission is what makes leftmost-branch preference " +
         "a per-anchor decision (the batch route enforces the same)")
-    def mk(user: Long, evs: IndexedSeq[CepEvent], m: CepSeqMatch): CepPatMatch =
-      CepPatMatch(user, evs(m.startIdx).ord, microsTs(evs(m.startIdx).tsUs),
-        evs(m.endIdx).ord, microsTs(evs(m.endIdx).tsUs),
-        m.nRows.toLong, m.stepCounts.mkString(","))
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepPatState, CepPatMatch](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[Ev], state: GroupState[CepPatState]) =>
-          val fresh = events.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          val buf0 = state.getOption.map(s =>
-            s.syms.indices.map(i => CepEvent(s.syms(i), s.ts(i), s.ords(i))))
-            .getOrElse(Seq.empty)
-          val evs = (buf0 ++ fresh).sortBy(e => (e.tsUs, e.ord)).toIndexedSeq
-          if (!streaming) {
-            state.remove()
-            val all = branches.zipWithIndex.flatMap { case (b, i) =>
-              Cep.matchSequence(evs, b).map(m => (i, m)) }
-            all.groupBy(_._2.startIdx).values.map(_.minBy(_._1)._2)
-              .toSeq.sortBy(_.startIdx).iterator.map(mk(user, evs, _))
-          } else {
-            val n = evs.size
-            // a branch's seal status for a match anchored EXACTLY at
-            // `at`: run the branch's seal scan on the suffix and read
-            // the anchor-0 outcome (a match starting at 0 = sealed;
-            // scan held at 0 = pending; anything else = that anchor
-            // failed or is dead — sealedScan already prunes pending
-            // anchors past the branch's WITHIN horizon)
-            def probe(b: CepPattern, at: Int): SealRes = {
-              val (ms, res) = sealedScan(evs.slice(at, n), b)
-              ms.headOption match {
-                case Some(m) if m.startIdx == 0 => Sealed(m)
-                case _ => if (res == 0) PendingViable else SealedFail
-              }
-            }
-            val out = scala.collection.mutable.ArrayBuffer.empty[CepSeqMatch]
-            var p = 0
-            var resume = -1
-            while (p < n && resume < 0) {
-              var win: CepSeqMatch = null
-              var pending = false
-              var bi = 0
-              // first Sealed in branch order wins; a Pending branch
-              // blocks every lower-preference branch (it may still
-              // seal and take the anchor)
-              while (bi < branches.size && win == null && !pending) {
-                probe(branches(bi), p) match {
-                  case Sealed(m, _) => win =
-                    m.copy(startIdx = m.startIdx + p, endIdx = m.endIdx + p)
-                  case SealedFail => ()
-                  case _ => pending = true
-                }
-                bi += 1
-              }
-              if (pending) resume = p
-              else { if (win != null) out += win; p += 1 }
-            }
-            val keep = if (resume < 0) IndexedSeq.empty[CepEvent]
-                       else evs.drop(resume)
-            if (keep.isEmpty) state.remove()
-            else state.update(CepPatState(keep.map(_.sym), keep.map(_.tsUs),
-              keep.map(_.ord)))
-            out.iterator.map(mk(user, evs, _))
-          }
+    // a branch's seal status for a match anchored EXACTLY at `at`: run
+    // the branch's seal scan on the suffix and read the anchor-0
+    // outcome (a match starting at 0 = sealed; scan held at 0 =
+    // pending; anything else = that anchor failed or is dead —
+    // sealedScan already prunes pending anchors past the branch's
+    // WITHIN horizon)
+    def probe(evs: IndexedSeq[CepEvent], b: CepPattern, at: Int): SealRes = {
+      val (ms, res) = sealedScan(evs.slice(at, evs.size), b)
+      ms.headOption match {
+        case Some(m) if m.startIdx == 0 => Sealed(m)
+        case _ => if (res == 0) PendingViable else SealedFail
       }
+    }
+    def seal(evs: IndexedSeq[CepEvent]): (Seq[CepSeqMatch], Int) = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[CepSeqMatch]
+      var p = 0
+      var resume = -1
+      while (p < evs.size && resume < 0) {
+        var win: CepSeqMatch = null
+        var pending = false
+        var bi = 0
+        // first Sealed in branch order wins; a Pending branch blocks
+        // every lower-preference branch (it may still seal and take
+        // the anchor)
+        while (bi < branches.size && win == null && !pending) {
+          probe(evs, branches(bi), p) match {
+            case Sealed(m, _) => win =
+              m.copy(startIdx = m.startIdx + p, endIdx = m.endIdx + p)
+            case SealedFail => ()
+            case _ => pending = true
+          }
+          bi += 1
+        }
+        if (pending) resume = p
+        else { if (win != null) out += win; p += 1 }
+      }
+      (out.toSeq, if (resume >= 0) resume else evs.size)
+    }
+    def replay(evs: IndexedSeq[CepEvent]): Seq[CepSeqMatch] = {
+      val all = branches.zipWithIndex.flatMap { case (b, i) =>
+        Cep.matchSequence(evs, b).map(m => (i, m)) }
+      all.groupBy(_._2.startIdx).values.map(_.minBy(_._1)._2).toSeq.sortBy(_.startIdx)
+    }
+    cepFold(ev, streaming)(evs => replay(cepEvents(evs)), evs => seal(cepEvents(evs))
+    )((user, evs, m, _) => Iterator.single(patMatch(user, evs, m)))
   }
 
   /** General MEASURES on the SEAL-AWARE matcher (VERDICT r10 item 7 —
@@ -3143,34 +3143,10 @@ object StreamOps extends Serializable {
         evs(m.endIdx).event_id, evs(m.endIdx).ts, m.nRows.toLong,
         longs.result(), nums.result(), strs.result())
     }
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepPatMState, CepMeasuredSql](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[Ev], state: GroupState[CepPatMState]) =>
-          val fresh = events.toSeq
-          val buf0 = state.getOption.map(s =>
-            s.syms.indices.map(i => Ev(s.ords(i), microsTs(s.ts(i)), user,
-              s.syms(i), s.vals(i))))
-            .getOrElse(Seq.empty)
-          val seq0 = state.getOption.map(_.matchSeq).getOrElse(0L)
-          val evs = (buf0 ++ fresh).sortBy(e => (tsMicros(e.ts), e.event_id))
-            .toIndexedSeq
-          val cepEvs = evs.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          if (!streaming) {
-            state.remove()
-            Cep.matchSequence(cepEvs, pattern).iterator.zipWithIndex
-              .map { case (m, i) => eval(user, evs, m, seq0 + i + 1) }
-          } else {
-            val (matches, resume) = sealedScan(cepEvs, pattern)
-            val keep = evs.drop(resume)
-            if (keep.isEmpty && matches.isEmpty && seq0 == 0L) state.remove()
-            else state.update(CepPatMState(keep.map(_.event_type),
-              keep.map(e => tsMicros(e.ts)), keep.map(_.event_id),
-              keep.map(_.value), seq0 + matches.size))
-            matches.iterator.zipWithIndex
-              .map { case (m, i) => eval(user, evs, m, seq0 + i + 1) }
-          }
-      }
+    cepFold(ev, streaming, numbered = true)(
+      evs => Cep.matchSequence(cepEvents(evs), pattern),
+      evs => sealedScan(cepEvents(evs), pattern)
+    )((user, evs, m, matchNo) => Iterator.single(eval(user, evs, m, matchNo)))
   }
 
   /** ALL ROWS PER MATCH on the SEAL-AWARE matcher (the row-level
@@ -3203,31 +3179,10 @@ object StreamOps extends Serializable {
             stepVars(k), e.value)
         })
     }
-    ev.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CepPatMState, CepAllRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (user: Long, events: Iterator[Ev], state: GroupState[CepPatMState]) =>
-          val fresh = events.toSeq
-          val buf0 = state.getOption.map(s =>
-            s.syms.indices.map(i => Ev(s.ords(i), microsTs(s.ts(i)), user,
-              s.syms(i), s.vals(i))))
-            .getOrElse(Seq.empty)
-          val evs = (buf0 ++ fresh).sortBy(e => (tsMicros(e.ts), e.event_id))
-            .toIndexedSeq
-          val cepEvs = evs.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          if (!streaming) {
-            state.remove()
-            Cep.matchSequence(cepEvs, pattern).iterator.flatMap(rows(user, evs, _))
-          } else {
-            val (matches, resume) = sealedScan(cepEvs, pattern)
-            val keep = evs.drop(resume)
-            if (keep.isEmpty) state.remove()
-            else state.update(CepPatMState(keep.map(_.event_type),
-              keep.map(e => tsMicros(e.ts)), keep.map(_.event_id),
-              keep.map(_.value), 0L))
-            matches.iterator.flatMap(rows(user, evs, _))
-          }
-      }
+    cepFold(ev, streaming)(
+      evs => Cep.matchSequence(cepEvents(evs), pattern),
+      evs => sealedScan(cepEvents(evs), pattern)
+    )((user, evs, m, _) => rows(user, evs, m))
   }
 
   /** Keep-last-N windowed aggregation (Flink window + CountEvictor.of(N)
@@ -3512,12 +3467,8 @@ object StreamOps extends Serializable {
           TimeMode.EventTime(), OutputMode.Append())
     else
       ev.groupByKey(_.user_id).flatMapGroups { (user: Long, it: Iterator[Ev]) =>
-        val evs = it.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-          .toIndexedSeq.sortBy(e => (e.tsUs, e.ord))
-        Cep.matchSequence(evs, pattern).iterator.map(m =>
-          CepPatMatch(user, evs(m.startIdx).ord, microsTs(evs(m.startIdx).tsUs),
-            evs(m.endIdx).ord, microsTs(evs(m.endIdx).tsUs), m.nRows.toLong,
-            m.stepCounts.mkString(",")))
+        val evs = cepSorted(it.toIndexedSeq)
+        Cep.matchSequence(cepEvents(evs), pattern).iterator.map(patMatch(user, evs, _))
       }
   }
 
@@ -3660,41 +3611,6 @@ object StreamOps extends Serializable {
       }
   }
 
-  /** Distributed CEP with per-step CONDITIONS over the full event row —
-    * Flink `SimpleCondition` (context-free predicates) and
-    * `IterativeCondition` (predicates over the rows already matched in
-    * the attempt, e.g. "next purchase with value above the first
-    * matched one"): one flatMapGroups per key runs the generalized
-    * sequential matcher (Cep.matchSequenceIter) with the conditions
-    * evaluated row-wise — per-key linear in events × pattern, the same
-    * cost shape as every other per-key CEP path here.
-    *
-    * Batch surface (the oracle-gated one). Iterative conditions are
-    * deliberately NOT compiled (the run table a gaps-and-islands plan
-    * aligns on is condition-independent — a match-relative predicate
-    * has no run decomposition). Incremental streaming emission exists
-    * for the bounded {1,1}-step relaxed TO-NEXT-ROW class via
-    * [[cepPatternIterStream]] (first-qualifying resolutions are
-    * arrival-fixed — see its seal argument); general quantifiers under
-    * iterative conditions would need per-anchor speculative evaluation
-    * (the reason Flink's CEP keeps full NFA buffers for these) and run
-    * the batch replay. Context-FREE predicates stream fine via the
-    * derived-symbol route (Cep.compileWhere's CASE + cepPattern).
-    */
-  def cepPatternIter(ev: Dataset[Ev], pattern: CepPattern,
-                     conds: IndexedSeq[(Ev, IndexedSeq[Seq[Ev]]) => Boolean]): Dataset[CepPatMatch] = {
-    import ev.sparkSession.implicits._
-    ev.groupByKey(_.user_id).flatMapGroups { (user: Long, events: Iterator[Ev]) =>
-      val evs = events.toIndexedSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-      Cep.matchSequenceIter[Ev](evs, e => tsMicros(e.ts), pattern, conds)
-        .iterator.map { m =>
-          CepPatMatch(user, evs(m.startIdx).event_id, evs(m.startIdx).ts,
-            evs(m.endIdx).event_id, evs(m.endIdx).ts,
-            m.nRows.toLong, m.stepCounts.mkString(","))
-        }
-    }
-  }
-
   /** Sentinel event type of the wildcard probe in
     * [[cepPatternIterStream]]'s seal test. Carries reserved control
     * characters so no real event_type can collide. */
@@ -3736,16 +3652,18 @@ object StreamOps extends Serializable {
     * the batch semantics demand (its resolution genuinely depends on
     * future rows).
     *
-    * Batch replay (streaming = false) is [[cepPatternIter]] — pinned by
-    * the independent first-qualifying-successor oracles
-    * (event_cep_sql_iter, stream_cep_iter_quant).
+    * Batch replay (streaming = false): one invocation per key runs
+    * Cep.matchSequenceIter over the key's whole sequence — the
+    * distributed form of the iterative matcher for every pattern shape
+    * (event_cep_iterative), pinned by the independent
+    * first-qualifying-successor oracles (event_cep_sql_iter,
+    * stream_cep_iter_quant).
     */
   def cepPatternIterStream(ev: Dataset[Ev], pattern: CepPattern,
       conds: IndexedSeq[(Ev, IndexedSeq[Seq[Ev]]) => Boolean],
       streaming: Boolean): Dataset[CepPatMatch] = {
     import ev.sparkSession.implicits._
-    if (!streaming) cepPatternIter(ev, pattern, conds)
-    else {
+    if (streaming)
       require(!pattern.strict && !pattern.anyMatch &&
         pattern.skip == SkipToNextRow,
         "the seal-aware iterative route covers RELAXED SKIP TO NEXT " +
@@ -3754,53 +3672,33 @@ object StreamOps extends Serializable {
           "monotonicity); strict or followedByAny shapes run the batch " +
           "replay (streaming = false) or a context-free compileWhere " +
           "rewrite")
-      val probeW = pattern.steps.map(s => math.max(1, s.minRep)).sum + 1
-      val probeConds: IndexedSeq[(Ev, IndexedSeq[Seq[Ev]]) => Boolean] =
-        conds.indices.map { si => (e: Ev, ctx: IndexedSeq[Seq[Ev]]) =>
-          if (e.event_type == ProbeSym) !pattern.steps(si).negated
-          else conds(si)(e, ctx)
-        }
-      ev.groupByKey(_.user_id)
-        .flatMapGroupsWithState[CepValState, CepPatMatch](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (user: Long, events: Iterator[Ev], state: GroupState[CepValState]) =>
-            val buf0: Seq[Ev] = state.getOption.map(s => s.ids.indices.map(i =>
-                Ev(s.ids(i), microsTs(s.ts(i)), user, s.syms(i), s.vals(i))))
-              .getOrElse(Seq.empty)
-            val evs = (buf0 ++ events).toIndexedSeq
-              .sortBy(e => (tsMicros(e.ts), e.event_id))
-            val n = evs.size
-            if (n == 0) { state.remove(); Iterator.empty }
-            else {
-              val bare = Cep.matchSequenceIter[Ev](evs, e => tsMicros(e.ts),
-                pattern, conds)
-              // sentinels: newest timestamp (the minimum any future row
-              // can carry), ids above every real id so they sort last
-              val sentinels = (0 until probeW).map(i =>
-                Ev(Long.MaxValue - probeW + i, evs(n - 1).ts, user,
-                  ProbeSym, 0.0))
-              val probe = Cep.matchSequenceIter[Ev](evs ++ sentinels,
-                e => tsMicros(e.ts), pattern, probeConds)
-              val bareBy = bare.map(m => m.startIdx -> m).toMap
-              val probeBy = probe.filter(_.startIdx < n)
-                .map(m => m.startIdx -> m).toMap
-              // sealed anchor: bare and probe agree (same match or both
-              // fail); resume at the first disagreement
-              val resume = (0 until n).find(p =>
-                bareBy.get(p) != probeBy.get(p)).getOrElse(n)
-              val keep = evs.drop(resume)
-              if (keep.isEmpty) state.remove()
-              else state.update(CepValState(keep.map(_.event_type),
-                keep.map(e => tsMicros(e.ts)), keep.map(_.event_id),
-                keep.map(_.value)))
-              bare.iterator.filter(_.startIdx < resume).map { m =>
-                CepPatMatch(user, evs(m.startIdx).event_id, evs(m.startIdx).ts,
-                  evs(m.endIdx).event_id, evs(m.endIdx).ts,
-                  m.nRows.toLong, m.stepCounts.mkString(","))
-              }
-            }
-        }
+    val probeW = pattern.steps.map(s => math.max(1, s.minRep)).sum + 1
+    val probeConds: IndexedSeq[(Ev, IndexedSeq[Seq[Ev]]) => Boolean] =
+      conds.indices.map { si => (e: Ev, ctx: IndexedSeq[Seq[Ev]]) =>
+        if (e.event_type == ProbeSym) !pattern.steps(si).negated
+        else conds(si)(e, ctx)
+      }
+    def matches(evs: IndexedSeq[Ev],
+                cs: IndexedSeq[(Ev, IndexedSeq[Seq[Ev]]) => Boolean]): Seq[CepSeqMatch] =
+      Cep.matchSequenceIter[Ev](evs, e => tsMicros(e.ts), pattern, cs)
+    def seal(evs: IndexedSeq[Ev]): (Seq[CepSeqMatch], Int) = {
+      val n = evs.size
+      val bare = matches(evs, conds)
+      // sentinels: newest timestamp (the minimum any future row can
+      // carry), ids above every real id so they sort last
+      val sentinels = (0 until probeW).map(i =>
+        Ev(Long.MaxValue - probeW + i, evs(n - 1).ts, evs(n - 1).user_id,
+          ProbeSym, 0.0))
+      val probe = matches(evs ++ sentinels, probeConds)
+      val bareBy = bare.map(m => m.startIdx -> m).toMap
+      val probeBy = probe.filter(_.startIdx < n).map(m => m.startIdx -> m).toMap
+      // sealed anchor: bare and probe agree (same match or both fail);
+      // resume at the first disagreement
+      val resume = (0 until n).find(p => bareBy.get(p) != probeBy.get(p)).getOrElse(n)
+      (bare.filter(_.startIdx < resume), resume)
     }
+    cepFold(ev, streaming)(matches(_, conds), seal
+    )((user, evs, m, _) => Iterator.single(patMatch(user, evs, m)))
   }
 
   /** Streaming ANN SERVING (the RAG-ingestion shape: every arriving
@@ -3867,129 +3765,52 @@ object StreamOps extends Serializable {
       .toDF()
   }
 
+  /** The `C+ P WITHIN withinMinutes` pattern under strict contiguity and
+    * AFTER MATCH SKIP PAST LAST ROW: a run of clicks ended by a purchase
+    * (event_cep_measures, event_cep_all_rows). */
+  def clickRun(withinMinutes: Int): CepPattern = CepPattern(
+    Seq(CepStep("click", 1, None), CepStep("purchase", 1, Some(1))),
+    Some(withinMinutes), SkipPastLastRow, strict = true)
+
   /** CEP MEASURES over pattern variables (SQL MATCH_RECOGNIZE
     * `MEASURES sum(C.value), avg(C.value), last(P.ts)`; Flink CEP's
-    * match map handed to PatternProcessFunction): the `C+ P WITHIN n`
-    * pattern with per-step row AGGREGATES projected into each match —
-    * count/first/last of the click run, exact-cents sum/avg/max of its
-    * values, and the purchase row's value. Runs on
-    * [[graft.api.Cep.matchSequenceMeasures]] — the sequential matcher
-    * with its consumption context snapshotted at emission — one
-    * flatMapGroups per key, per-key linear, the same placement as every
-    * other per-key CEP path.
+    * match map handed to PatternProcessFunction) for [[clickRun]]: per
+    * match, count/first/last of the click run, exact-cents sum/avg/max
+    * of its values, and the purchase row's value.
     *
-    * The strict matcher's WITHIN (span check with anchor advance)
+    * Runs on [[cepFold]]: streaming emission through [[sealedScan]],
+    * batch replay (streaming = false) through the reference matcher.
+    * Under STRICT contiguity a match's consumed rows are exactly the
+    * contiguous block startIdx..endIdx, partitioned by stepCounts in
+    * step order, so one measures eval slices them off the buffer in
+    * both modes. The strict WITHIN (span check with anchor advance)
     * consumes exactly the run's qualifying SUFFIX — the rows with
-    * `ts >= purchase_ts - within` — because a run is time-ordered, so
-    * the aggregates equal the event_cep contract semantics (WITHIN
-    * filters run rows) and the oracle is the same islands rewrite
-    * extended with the per-step aggregates. Cross-checked against an
-    * independent sequential fold on random sequences in CepSpec.
-    */
-  def cepMeasures(ev: Dataset[Ev], withinMinutes: Int): Dataset[CepMeasured] = {
-    import ev.sparkSession.implicits._
-    val pattern = CepPattern(
-      Seq(CepStep("click", 1, None), CepStep("purchase", 1, Some(1))),
-      Some(withinMinutes), SkipPastLastRow, strict = true)
-    ev.groupByKey(_.user_id).flatMapGroups { (user: Long, events: Iterator[Ev]) =>
-      val evs = events.toIndexedSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-      Cep.matchSequenceMeasures[Ev](evs, e => tsMicros(e.ts), _.event_type, pattern)
-        .iterator.map { case (_, stepRows) =>
-          val clicks = stepRows(0)
-          val pur = stepRows(1).head
-          val cents = clicks.map(c => math.round(c.value * 100))
-          val sc = cents.sum
-          CepMeasured(user, pur.event_id, pur.ts, clicks.size.toLong,
-            clicks.head.ts, clicks.last.ts,
-            sc / 100.0, sc.toDouble / (100.0 * clicks.size),
-            cents.max / 100.0, pur.value)
-        }
-    }
-  }
-
-  /** MEASURES under seal-aware INCREMENTAL streaming emission — the
-    * stateful sibling of [[cepMeasures]], running the same C+ P WITHIN
-    * pattern through [[sealedScan]] with the buffer retaining row
-    * VALUES ([[CepValState]]). Under STRICT contiguity a sealed match's
-    * consumed rows are exactly the contiguous buffer block
-    * startIdx..endIdx partitioned by stepCounts in step order, so the
-    * measures slice directly off the retained rows — no separate
-    * consumption context is needed incrementally (the batch path uses
-    * the context-snapshot form; both are pinned to the same oracle).
-    * State bounds, arrival-order stance, and cross-batch carry are
-    * [[cepPattern]]'s, unchanged.
+    * `ts >= purchase_ts - within` — so the aggregates equal the
+    * event_cep contract semantics, and the oracle is the same islands
+    * rewrite extended with the per-step aggregates.
     */
   def cepMeasuresStream(ev: Dataset[Ev], withinMinutes: Int,
                         streaming: Boolean): Dataset[CepMeasured] = {
     import ev.sparkSession.implicits._
-    if (!streaming) cepMeasures(ev, withinMinutes)
-    else {
-      val pattern = CepPattern(
-        Seq(CepStep("click", 1, None), CepStep("purchase", 1, Some(1))),
-        Some(withinMinutes), SkipPastLastRow, strict = true)
-      ev.groupByKey(_.user_id)
-        .flatMapGroupsWithState[CepValState, CepMeasured](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) {
-          (user: Long, events: Iterator[Ev], state: GroupState[CepValState]) =>
-            val buf0: Seq[Ev] = state.getOption.map(s => s.ids.indices.map(i =>
-                Ev(s.ids(i), microsTs(s.ts(i)), user, s.syms(i), s.vals(i))))
-              .getOrElse(Seq.empty)
-            val evs = (buf0 ++ events).toIndexedSeq
-              .sortBy(e => (tsMicros(e.ts), e.event_id))
-            val cepEvs = evs.map(e => CepEvent(e.event_type, tsMicros(e.ts), e.event_id))
-            val (matches, resume) = sealedScan(cepEvs, pattern)
-            val keep = evs.drop(resume)
-            if (keep.isEmpty) state.remove()
-            else state.update(CepValState(keep.map(_.event_type),
-              keep.map(e => tsMicros(e.ts)), keep.map(_.event_id), keep.map(_.value)))
-            matches.iterator.map { m =>
-              val clicks = evs.slice(m.startIdx, m.startIdx + m.stepCounts(0))
-              val pur = evs(m.startIdx + m.stepCounts(0))
-              val cents = clicks.map(c => math.round(c.value * 100))
-              val sc = cents.sum
-              CepMeasured(user, pur.event_id, pur.ts, clicks.size.toLong,
-                clicks.head.ts, clicks.last.ts, sc / 100.0,
-                sc.toDouble / (100.0 * clicks.size), cents.max / 100.0, pur.value)
-            }
-        }
-    }
-  }
-
-  /** ALL ROWS PER MATCH (the SQL-standard MATCH_RECOGNIZE output mode
-    * Flink's CEP does not offer — a beyond-Flink completion of the
-    * MEASURES surface): instead of one summary row per match, emit
-    * EVERY consumed row, tagged with its match identity (the ending
-    * purchase), its step symbol, and its 1-based consumption position.
-    * Same matches as [[cepMeasures]] / event_cep (C+ P WITHIN n,
-    * SKIP PAST LAST ROW), same per-key placement; output is O(consumed
-    * rows), each row emitted at most once because matches never
-    * overlap under PAST LAST ROW. Consumption order equals the
-    * (ts, event_id) order over the match's rows — which is what the
-    * oracle's per-match row_number replays.
-    */
-  def cepAllRows(ev: Dataset[Ev], withinMinutes: Int): Dataset[CepMatchRow] = {
-    import ev.sparkSession.implicits._
-    val pattern = CepPattern(
-      Seq(CepStep("click", 1, None), CepStep("purchase", 1, Some(1))),
-      Some(withinMinutes), SkipPastLastRow, strict = true)
-    ev.groupByKey(_.user_id).flatMapGroups { (user: Long, events: Iterator[Ev]) =>
-      val evs = events.toIndexedSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
-      Cep.matchSequenceMeasures[Ev](evs, e => tsMicros(e.ts), _.event_type, pattern)
-        .iterator.flatMap { case (_, stepRows) =>
-          val pur = stepRows(1).head
-          (stepRows(0) ++ stepRows(1)).iterator.zipWithIndex.map { case (r, i) =>
-            CepMatchRow(user, pur.event_id, i + 1L, r.event_id, r.ts,
-              r.event_type, r.value)
-          }
-        }
+    val pattern = clickRun(withinMinutes)
+    cepFold(ev, streaming)(
+      evs => Cep.matchSequence(cepEvents(evs), pattern),
+      evs => sealedScan(cepEvents(evs), pattern)) { (user, evs, m, _) =>
+      val clicks = evs.slice(m.startIdx, m.startIdx + m.stepCounts(0))
+      val pur = evs(m.startIdx + m.stepCounts(0))
+      val cents = clicks.map(c => math.round(c.value * 100))
+      val sc = cents.sum
+      Iterator.single(CepMeasured(user, pur.event_id, pur.ts, clicks.size.toLong,
+        clicks.head.ts, clicks.last.ts, sc / 100.0,
+        sc.toDouble / (100.0 * clicks.size), cents.max / 100.0, pur.value))
     }
   }
 
   /** ALL ROWS PER MATCH for an ARBITRARY symbolic pattern — the general
     * executor behind the SQL front door's `ALL ROWS PER MATCH` clause
-    * (api.MatchRecognize.run), generalizing [[cepAllRows]]'s fixed C+ P
-    * shape: every consumed row of every match of `pattern`, tagged with
-    * match identity (start_id/end_id — start_id is unique per match
+    * (api.MatchRecognize.run) for the relaxed and negated patterns
+    * [[cepPatternAllRows]] declines: every consumed row of every match
+    * of `pattern`, tagged with match identity (start_id/end_id — start_id is unique per match
     * under every skip strategy, since anchors strictly advance), its
     * consuming step's symbol, and its 1-based consumption position.
     * Runs [[graft.api.Cep.matchSequenceMeasures]] (the sequential
@@ -4005,7 +3826,7 @@ object StreamOps extends Serializable {
   def cepAllRowsPattern(ev: Dataset[Ev], pattern: CepPattern): Dataset[CepAllRow] = {
     import ev.sparkSession.implicits._
     ev.groupByKey(_.user_id).flatMapGroups { (user: Long, events: Iterator[Ev]) =>
-      val evs = events.toIndexedSeq.sortBy(e => (tsMicros(e.ts), e.event_id))
+      val evs = cepSorted(events.toIndexedSeq)
       Cep.matchSequenceMeasures[Ev](evs, e => tsMicros(e.ts), _.event_type, pattern)
         .iterator.flatMap { case (m, stepRows) =>
           val startId = evs(m.startIdx).event_id

@@ -67,6 +67,11 @@ object Bridge {
 
   private val ProbeName = "graft_checkpoint_probes"
 
+  /** Blocks until every event posted so far has reached the SparkListeners
+    * of `spark` (the listener bus delivers asynchronously). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Drops the stored rows of a frame made by `localCheckpoint` or
     * [[checkpointProbed]]; reading it afterwards fails. Any other frame is
     * left alone. */

@@ -228,8 +228,12 @@ class CepSqlSpec extends SparkSuite {
       .orderBy("user_id", "purchase_id", "pos").collect()
     val ev = evDf.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value")).as[graft.streaming.Ev]
-    val viaDsl = graft.streaming.StreamOps.cepAllRows(ev, withinMinutes = 10)
-      .toDF().orderBy("user_id", "purchase_id", "pos").collect()
+    val viaDsl = graft.streaming.StreamOps.cepPatternAllRows(ev,
+        graft.streaming.StreamOps.clickRun(10), Seq("click", "purchase"),
+        streaming = false)
+      .select(col("user_id"), col("end_id").as("purchase_id"), col("pos"),
+        col("event_id"), col("ts"), col("step"), col("value"))
+      .orderBy("user_id", "purchase_id", "pos").collect()
     assert(viaSql.nonEmpty)
     assert(viaSql.toSeq === viaDsl.toSeq)
     // a value-predicate DEFINE routes through the derived-symbol CASE:
@@ -260,11 +264,12 @@ class CepSqlSpec extends SparkSuite {
       .withColumn("click_sum", Det.round2(col("click_sum")))
       .orderBy("user_id", "end_id").collect()
     assert(got.nonEmpty)
-    // independent check: StreamOps.cepMeasures is a SEPARATE sequential
-    // implementation of the same C+ P WITHIN 10 min measures
+    // independent check: StreamOps.cepMeasuresStream is a SEPARATE
+    // sequential implementation of the same C+ P WITHIN 10 min measures
     val ev = evDf.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value")).as[graft.streaming.Ev]
-    val dsl = graft.streaming.StreamOps.cepMeasures(ev, withinMinutes = 10)
+    val dsl = graft.streaming.StreamOps.cepMeasuresStream(ev, withinMinutes = 10,
+        streaming = false)
       .collect().map(m => (m.user_id, m.purchase_id) -> m).toMap
     assert(got.length === dsl.size)
     for (r <- got) {
@@ -490,8 +495,8 @@ class CepSqlSpec extends SparkSuite {
       .orderBy("user_id", "start_id").collect()
     val ev = evDf.select(col("event_id"), col("ts"), col("user_id"),
       col("event_type"), col("value")).as[graft.streaming.Ev]
-    val viaDsl = graft.streaming.StreamOps.cepPatternIter(ev,
-        pats.iter, pats.iterConds)
+    val viaDsl = graft.streaming.StreamOps.cepPatternIterStream(ev,
+        pats.iter, pats.iterConds, streaming = false)
       .toDF().orderBy("user_id", "start_id").collect()
     assert(viaSql.nonEmpty)
     assert(viaSql.toSeq === viaDsl.toSeq)

@@ -729,40 +729,6 @@ class StreamingSpec extends SparkSuite {
     assert(got == batch, s"stream $got != batch replay $batch")
   }
 
-  test("quantified iterative CEP over random batch splits equals batch replay") {
-    val pat = graft.queries.Analytic.CepPatterns.iterQuant
-    val conds = graft.queries.Analytic.CepPatterns.iterQuantConds
-    val rnd = new scala.util.Random(20260814L)
-    val syms = Vector("purchase", "purchase", "purchase", "view", "click")
-    val evs = (for {
-      u <- 1 to 12
-      i <- 0 until (8 + rnd.nextInt(10))
-    } yield Ev((u * 100 + i).toLong,
-        java.sql.Timestamp.valueOf(
-          ts("2024-01-01 10:00:00").toLocalDateTime.plusMinutes(i * 37L)),
-        u.toLong, syms(rnd.nextInt(syms.size)),
-        math.floor(rnd.nextDouble() * 5000) / 100.0)).toVector
-    // trailing batch two days out: past every anchor's WITHIN horizon;
-    // a VIEW row, so it breaks any tail run without matching anything
-    val sealer = (1 to 12).map(u => Ev(u * 100 + 99L,
-      ts("2024-01-03 10:00:00"), u.toLong, "view", 0.0))
-    val full = evs ++ sealer
-    val ref = StreamOps.cepPatternIterStream(full.toDS(), pat, conds,
-        streaming = false)
-      .collect().toSet
-    val cuts = Seq.fill(4)(rnd.nextInt(evs.size)).sorted
-    val batches = (Seq(0) ++ cuts ++ Seq(evs.size)).sliding(2)
-      .collect { case Seq(a, b) if b > a => evs.slice(a, b) }.toSeq
-    val ms = MemoryStream[Ev]
-    val q = StreamOps.cepPatternIterStream(ms.toDS(), pat, conds, streaming = true)
-      .writeStream.format("memory").queryName("eqiterq").outputMode("append").start()
-    (batches :+ sealer).foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("eqiterq").as[graft.streaming.CepPatMatch].collect().toSet
-    assert(got === ref, s"stream ${got.size} matches != batch ${ref.size}")
-    assert(ref.nonEmpty, "fixture must produce matches")
-  }
-
   test("streaming ANN serving: chopped probe stream equals the batch lshTopK") {
     import org.apache.spark.sql.functions.col
     val corpus = Tables.embeddings(spark, sf001)
@@ -1992,93 +1958,135 @@ class StreamingSpec extends SparkSuite {
       "fixture must exercise both matched and null-version facts")
   }
 
+  /** One sealed-fold CEP operator in the random-split cases below: the
+    * seeded input it runs on and its output in either mode. `words`
+    * are the symbol runs the generator draws from (one per draw, each
+    * row of a run one `stepMinutes` after the last); `sealer` is the
+    * trailing batch's row for user `u`, which seals every pending
+    * anchor. */
+  private case class SplitCase(name: String, seed: Long,
+      words: Vector[Seq[String]], stepMinutes: Long, cuts: Int,
+      sealer: Long => Ev,
+      run: (org.apache.spark.sql.Dataset[Ev], Boolean) => org.apache.spark.sql.DataFrame)
+
+  /** The sealed-fold CEP operators' random-split cases, by name. */
+  private lazy val splitCases: Seq[SplitCase] = {
+    val pats = graft.queries.Analytic.CepPatterns
+    def one(syms: String*): Vector[Seq[String]] = syms.toVector.map(Seq(_))
+    def sealAt(day: String, sym: String, value: Double)(u: Long): Ev =
+      Ev(u * 100 + 99L, ts(s"$day 10:00:00"), u, sym, value)
+    val aggSpec = graft.api.MatchRecognize.parse(graft.queries.Analytic.CepSql.aggMeasures)
+    val aggPat = aggSpec.toSymbolic.get._2
+    val aggVars = aggSpec.stepElems.map(_.variable)
+    val aggMeasures = graft.api.MatchRecognize.streamMeasures(aggSpec)
+    val altBranches = graft.api.MatchRecognize.parse(graft.queries.Analytic.CepSql.altFunnel)
+      .expandBranches.map(_.toSymbolic.get._2)
+    val funnel = one("signup", "click", "purchase", "view")
+    val clickRun = one("click", "click", "purchase", "view")
+    Seq(
+      SplitCase("cepPattern quant", 20260901L,
+        Vector(Seq("signup", "signup", "view", "purchase"), Seq("signup"),
+          Seq("view"), Seq("purchase"), Seq("click")), 5L, 3,
+        sealAt("2024-01-03", "logout", 0.0),
+        (ds, s) => StreamOps.cepPattern(ds, pats.quant, s).toDF()),
+      SplitCase("cepPattern relaxed", 20260902L, funnel, 37L, 3,
+        sealAt("2024-01-03", "logout", 0.0),
+        (ds, s) => StreamOps.cepPattern(ds, pats.relaxed, s).toDF()),
+      SplitCase("cepPattern skipFirst", 20260903L, funnel, 37L, 3,
+        sealAt("2024-01-03", "logout", 0.0),
+        (ds, s) => StreamOps.cepPattern(ds, pats.skipFirst, s).toDF()),
+      SplitCase("cepPattern group", 20260904L, one("view", "click", "click", "purchase"),
+        5L, 3, sealAt("2024-01-03", "logout", 0.0),
+        (ds, s) => StreamOps.cepPattern(ds, pats.group, s).toDF()),
+      SplitCase("cepPatternAlt", 20260905L, funnel, 37L, 3,
+        sealAt("2024-01-03", "logout", 0.0),
+        (ds, s) => StreamOps.cepPatternAlt(ds, altBranches, s).toDF()),
+      SplitCase("cepMeasuresStream", 20260906L, clickRun, 3L, 3,
+        sealAt("2024-01-02", "view", 0.0),
+        (ds, s) => StreamOps.cepMeasuresStream(ds, withinMinutes = 10, s).toDF()),
+      // a trailing VIEW per user resolves every pending run
+      SplitCase("cepPatternMeasures", 20260817L, clickRun, 3L, 3,
+        sealAt("2024-01-02", "view", 0.0),
+        (ds, s) => StreamOps.cepPatternMeasures(ds, aggPat, aggVars, aggMeasures, s).toDF()),
+      SplitCase("cepPatternAllRows", 20260817L, clickRun, 3L, 3,
+        sealAt("2024-01-02", "view", 0.0),
+        (ds, s) => StreamOps.cepPatternAllRows(ds, aggPat, aggVars, s).toDF()),
+      // trailing purchase two days out: past every anchor's WITHIN
+      // horizon, and too low to match anything — it only seals
+      SplitCase("cepPatternIterStream iter", 20260818L,
+        one("purchase", "purchase", "view", "click"), 37L, 3,
+        sealAt("2024-01-03", "purchase", 0.0),
+        (ds, s) => StreamOps.cepPatternIterStream(ds, pats.iter, pats.iterConds, s).toDF()),
+      // a trailing VIEW breaks any tail purchase run without matching
+      SplitCase("cepPatternIterStream iterQuant", 20260814L,
+        one("purchase", "purchase", "purchase", "view", "click"), 37L, 4,
+        sealAt("2024-01-03", "view", 0.0),
+        (ds, s) => StreamOps.cepPatternIterStream(ds, pats.iterQuant,
+          pats.iterQuantConds, s).toDF()))
+  }
+
+  /** The seal-and-retain guarantee for the named cases: however an
+    * in-order stream is chopped into micro-batches, the rows each
+    * operator emits equal its streaming = false replay over the same
+    * rows once a trailing batch seals every pending anchor — no row
+    * lost, none emitted twice. */
+  private def assertSplitsReplay(names: String*): Unit = {
+    val t0 = ts("2024-01-01 10:00:00").toLocalDateTime
+    names.foreach { name =>
+      val ci = splitCases.indexWhere(_.name == name)
+      assert(ci >= 0, s"no split case named $name")
+      val c = splitCases(ci)
+      val rnd = new scala.util.Random(c.seed)
+      val evs = (1 to 12).flatMap { u =>
+        val rows = Vector.newBuilder[Ev]
+        var i = 0
+        for (_ <- 0 until (8 + rnd.nextInt(10));
+             sym <- c.words(rnd.nextInt(c.words.size))) {
+          rows += Ev((u * 100 + i).toLong,
+            Timestamp.valueOf(t0.plusMinutes(i * c.stepMinutes)), u.toLong, sym,
+            math.floor(rnd.nextDouble() * 5000) / 100.0)
+          i += 1
+        }
+        rows.result()
+      }.toVector
+      val sealer = (1 to 12).map(u => c.sealer(u.toLong))
+      // rows as a multiset: a row emitted twice must not pass
+      def counted(rows: Array[org.apache.spark.sql.Row]): Map[org.apache.spark.sql.Row, Int] =
+        rows.groupBy(identity).map { case (r, rs) => r -> rs.length }
+      val ref = counted(c.run((evs ++ sealer).toDS(), false).collect())
+      // sealer-free replay: the sealer only seals, it never removes a match
+      val bare = counted(c.run(evs.toDS(), false).collect())
+      val cuts = Seq.fill(c.cuts)(rnd.nextInt(evs.size)).sorted
+      val batches = (Seq(0) ++ cuts ++ Seq(evs.size)).sliding(2)
+        .collect { case Seq(a, b) if b > a => evs.slice(a, b) }.toSeq
+      val ms = MemoryStream[Ev]
+      val q = c.run(ms.toDS(), true)
+        .writeStream.format("memory").queryName(s"cepsplit$ci").outputMode("append").start()
+      (batches :+ sealer).foreach { b => ms.addData(b: _*); q.processAllAvailable() }
+      q.stop()
+      val got = counted(spark.table(s"cepsplit$ci").collect())
+      assert(got === ref,
+        s"${c.name}: stream ${got.values.sum} rows != batch ${ref.values.sum}")
+      assert(ref.nonEmpty, s"${c.name}: fixture must produce matches")
+      assert(bare.keySet.subsetOf(ref.keySet), s"${c.name}: the sealer removed a match")
+    }
+  }
+
+  test("sealed-fold CEP operators over random batch splits equal their batch replay") {
+    assertSplitsReplay("cepPattern quant", "cepPattern relaxed", "cepPattern skipFirst",
+      "cepPattern group", "cepPatternAlt", "cepMeasuresStream")
+  }
+
   test("iterative CEP over random batch splits equals batch replay") {
-    // the seal-aware guarantee for the iterative route: however the
-    // in-order stream is chopped, emitted matches equal the batch
-    // replay's once a trailing batch pushes every anchor past WITHIN
-    val pat = graft.queries.Analytic.CepPatterns.iter
-    val conds = graft.queries.Analytic.CepPatterns.iterConds
-    val rnd = new scala.util.Random(20260818L)
-    val syms = Vector("purchase", "purchase", "view", "click")
-    val evs = (for {
-      u <- 1 to 12
-      i <- 0 until (8 + rnd.nextInt(10))
-    } yield Ev((u * 100 + i).toLong,
-        java.sql.Timestamp.valueOf(
-          ts("2024-01-01 10:00:00").toLocalDateTime.plusMinutes(i * 37L)),
-        u.toLong, syms(rnd.nextInt(syms.size)),
-        math.floor(rnd.nextDouble() * 5000) / 100.0)).toVector
-    // trailing batch two days out: past every anchor's WITHIN horizon,
-    // and too low to match anything — it only seals
-    val sealer = (1 to 12).map(u => Ev(u * 100 + 99L,
-      ts("2024-01-03 10:00:00"), u.toLong, "purchase", 0.0))
-    val full = evs ++ sealer
-    val ref = StreamOps.cepPatternIterStream(full.toDS(), pat, conds,
-        streaming = false)
-      .collect().toSet
-    val cuts = Seq.fill(3)(rnd.nextInt(evs.size)).sorted
-    val batches = (Seq(0) ++ cuts ++ Seq(evs.size)).sliding(2)
-      .collect { case Seq(a, b) if b > a => evs.slice(a, b) }.toSeq
-    val ms = MemoryStream[Ev]
-    val q = StreamOps.cepPatternIterStream(ms.toDS(), pat, conds, streaming = true)
-      .writeStream.format("memory").queryName("eqiter").outputMode("append").start()
-    (batches :+ sealer).foreach { b => ms.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    val got = spark.table("eqiter").as[graft.streaming.CepPatMatch].collect().toSet
-    assert(got === ref, s"stream ${got.size} matches != batch ${ref.size}")
-    assert(ref.nonEmpty, "fixture must produce matches")
+    assertSplitsReplay("cepPatternIterStream iter")
+  }
+
+  test("quantified iterative CEP over random batch splits equals batch replay") {
+    assertSplitsReplay("cepPatternIterStream iterQuant")
   }
 
   test("streaming measures/all-rows over random batch splits equal batch replay") {
-    // the seal-aware guarantee, end to end: however the in-order stream
-    // is chopped into micro-batches, the emitted matches (with their
-    // measures) and consumed rows are EXACTLY the batch replay's
-    val spec = graft.api.MatchRecognize.parse(graft.queries.Analytic.CepSql.aggMeasures)
-    val (_, pat) = spec.toSymbolic.get
-    val sm = graft.api.MatchRecognize.streamMeasures(spec)
-    val vars = spec.stepElems.map(_.variable)
-    val rnd = new scala.util.Random(20260817L)
-    val syms = Vector("click", "click", "purchase", "view")
-    val evs = (for {
-      u <- 1 to 12
-      i <- 0 until (8 + rnd.nextInt(10))
-    } yield Ev((u * 100 + i).toLong,
-        java.sql.Timestamp.valueOf(
-          ts("2024-01-01 10:00:00").toLocalDateTime.plusMinutes(i * 3L)),
-        u.toLong, syms(rnd.nextInt(syms.size)),
-        math.floor(rnd.nextDouble() * 5000) / 100.0)).toVector
-    // batch replay reference (sealer-free)
-    val batchM = StreamOps.cepPatternMeasures(evs.toDS(), pat, vars, sm,
-      streaming = false).collect().toSet
-    val batchR = StreamOps.cepPatternAllRows(evs.toDS(), pat, vars,
-      streaming = false).collect().toSet
-    // streaming: 4 random in-order splits (plus a trailing seal batch of
-    // one 'view' per user so every pending run resolves)
-    val cuts = Seq.fill(3)(rnd.nextInt(evs.size)).sorted
-    val batches = (Seq(0) ++ cuts ++ Seq(evs.size)).sliding(2)
-      .collect { case Seq(a, b) if b > a => evs.slice(a, b) }.toSeq
-    val sealer = (1 to 12).map(u => Ev(u * 100 + 99L,
-      ts("2024-01-02 10:00:00"), u.toLong, "view", 0.0))
-    val ms1 = MemoryStream[Ev]
-    val q1 = StreamOps.cepPatternMeasures(ms1.toDS(), pat, vars, sm, streaming = true)
-      .writeStream.format("memory").queryName("eqm").outputMode("append").start()
-    (batches :+ sealer).foreach { b => ms1.addData(b: _*); q1.processAllAvailable() }
-    q1.stop()
-    val ms2 = MemoryStream[Ev]
-    val q2 = StreamOps.cepPatternAllRows(ms2.toDS(), pat, vars, streaming = true)
-      .writeStream.format("memory").queryName("eqr").outputMode("append").start()
-    (batches :+ sealer).foreach { b => ms2.addData(b: _*); q2.processAllAvailable() }
-    q2.stop()
-    // the sealer rows are extra input to the reference too
-    val full = evs ++ sealer
-    val refM = StreamOps.cepPatternMeasures(full.toDS(), pat, vars, sm,
-      streaming = false).collect().toSet
-    val refR = StreamOps.cepPatternAllRows(full.toDS(), pat, vars,
-      streaming = false).collect().toSet
-    assert(spark.table("eqm").as[graft.streaming.CepMeasuredSql].collect().toSet === refM)
-    assert(spark.table("eqr").as[graft.streaming.CepAllRow].collect().toSet === refR)
-    // and the original (sealer-free) reference is a subset sanity check
-    assert(batchM.subsetOf(refM) && batchR.subsetOf(refR))
+    assertSplitsReplay("cepPatternMeasures", "cepPatternAllRows")
   }
 
   test("streaming general MEASURES: seal-aware emission, cross-batch MATCH_NUMBER") {
@@ -2539,7 +2547,7 @@ class StreamingSpec extends SparkSuite {
   test("skip-CEP checkpoint restart: an unsealed anchor's buffer survives into run 2 (RocksDB)") {
     import graft.api.Sinks
     import java.nio.file.Files
-    // restart + skip-to on the RocksDB provider: the carried CepPatState
+    // restart + skip-to on the RocksDB provider: the carried CepBuf
     // must round-trip the store's serialization across process restarts
     val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
